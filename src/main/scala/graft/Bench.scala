@@ -346,17 +346,16 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     val skewJson = skew.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // stream section runs TWICE, report each key's max: the StreamLab
+    // stream section runs TWICE and reports the warm run: the StreamLab
     // churn experiment (SOAK_r17.md §5) showed the first reading after
     // a long batch sweep is depressed by state-store init, micro-batch
     // codegen, and rate-source ramp (65-88k vs 127-128k warm on the
-    // interval join) — run 1 is the untimed warmup, the warm reading
-    // is the sustained capability the pins measure
+    // interval join) — run 1 is the warmup, run 2 the sustained
+    // capability the pins measure; run 1 fills in only keys run 2 lacks
     val stream = try {
       val s1 = streamSection(spark)
       val s2 = streamSection(spark)
-      (s1.keySet ++ s2.keySet).map(k =>
-        k -> math.max(s1.getOrElse(k, -1.0), s2.getOrElse(k, -1.0))).toMap
+      s1 ++ s2
     } catch { case e: Throwable =>
       System.err.println(s"[bench] stream section failed: ${e.getMessage}")
       Map.empty[String, Double] }

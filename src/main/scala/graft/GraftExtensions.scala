@@ -14,44 +14,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // single source of truth for builders (incl. input-type coercion):
-    // graft.functions.VectorExpressions — keep the two registration
-    // points from diverging
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      graft.functions.VectorExpressions.cosineBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "dot_product"),
-      graft.functions.VectorExpressions.dotBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("vec_sum"),
-      new ExpressionInfo(classOf[graft.functions.VecSum].getName, "vec_sum"),
-      graft.functions.VectorExpressions.vecSumBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("lsh_bucket"),
-      new ExpressionInfo(classOf[graft.functions.LshBucket].getName, "lsh_bucket"),
-      graft.functions.VectorExpressions.lshBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("lsh_probes"),
-      new ExpressionInfo(classOf[graft.functions.LshProbes].getName, "lsh_probes"),
-      graft.functions.VectorExpressions.lshProbesBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("top_k_pairs"),
-      new ExpressionInfo(classOf[graft.functions.TopKPairs].getName, "top_k_pairs"),
-      graft.functions.VectorExpressions.topKBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("kmin_distinct"),
-      new ExpressionInfo(classOf[graft.functions.KMinDistinct].getName, "kmin_distinct"),
-      graft.functions.VectorExpressions.kminBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("vint_pack"),
-      new ExpressionInfo(classOf[graft.functions.VIntPack].getName, "vint_pack"),
-      graft.functions.VectorExpressions.vintPackBuilder _))
-    e.injectFunction((
-      FunctionIdentifier("vint_unpack"),
-      new ExpressionInfo(classOf[graft.functions.VIntUnpack].getName, "vint_unpack"),
-      graft.functions.VectorExpressions.vintUnpackBuilder _))
+    // the same (name, builder, class) list VectorExpressions.register
+    // walks, so the two registration points cannot diverge
+    graft.functions.VectorExpressions.functions.foreach { case (name, builder, cls) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }

@@ -167,7 +167,7 @@ object GraftOps {
     * truth); the defaults are the oracle-verified production scheme. */
   def minhashCandidates(df: DataFrame, id: String, text: String, n: Int = 3,
                         bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame = {
-    val (sigs, cand) = bandedSignatures(df, id, text, n, bands, rowsPerBand)
+    val (sigs, cand, _) = bandedSignatures(df, id, text, n, bands, rowsPerBand)
     scoreMinhashPairs(sigs, bucketPairs(cand, id, Long.MaxValue, 1), id)
   }
 
@@ -187,184 +187,132 @@ object GraftOps {
   def minhashCandidatesSalted(df: DataFrame, id: String, text: String, n: Int = 3,
                               bands: Int = Bands, rowsPerBand: Int = RowsPerBand,
                               hotThreshold: Long = 10000, salt: Int = 8): DataFrame = {
-    val (sigs, cand) = bandedSignatures(df, id, text, n, bands, rowsPerBand)
-    scoreMinhashPairs(sigs, bucketPairs(cand, id, hotThreshold, salt), id)
+    val (sigs, cand, nDocs) = bandedSignatures(df, id, text, n, bands, rowsPerBand)
+    scoreMinhashPairs(sigs,
+      bucketPairs(cand, id, hotThreshold, salt, rowsPerTable = nDocs), id)
   }
 
-  /** The a<b pair enumeration over a bucketed candidate table
-    * (id, bj, bv) shared by the MinHash / SimHash / embedding LSH
-    * tiers. `hotThreshold` = Long.MaxValue is the plain self-join;
-    * otherwise buckets over the threshold take the salted path — probe
-    * side keyed by md5(id) % salt, build side replicated `salt` ways —
-    * so one hot bucket's quadratic enumeration spreads across `salt`
-    * reducers while cold buckets join plainly. The pair SET is
-    * identical either way (hot pairs are found from their a-side salt;
-    * cross-band duplicates collapse in the distinct). The bucket-count
-    * pass is map-side combinable and rides the (bj, bv) shuffle the
-    * join needs anyway. */
+  /** The ONE a<b pair core over a bucketed candidate table
+    * (id, bj, bv[, vec]) shared by the MinHash / SimHash / same-key /
+    * k-NN / embedding LSH tiers.
+    *
+    * Cold buckets (at or under `hotThreshold` rows; every bucket when
+    * `hotThreshold` = Long.MaxValue) are grouped ONCE per (bj, bv) and
+    * the native `bucket_pairs` kernel enumerates each bucket's a < b
+    * pairs from its member list — no sort-merge self-join over the
+    * ordered in-bucket rows. With a `vec` payload (array<double>) each
+    * pair carries its exact cosine, computed by the kernel inside the
+    * bucket: vectors ride only the banding shuffle and everything
+    * pair-sized moves as (a, b, cos). A `threshold` lets the kernel drop
+    * pairs whose RAW cosine is below threshold − 1e-6 before any
+    * BigDecimal rounding runs; the exact `round(cos, 6) >= threshold`
+    * filter and the cross-band distinct then run on the survivors.
+    *
+    * Hot buckets must never be collected into one row, so they keep the
+    * salted sort-merge join: probe side keyed by md5(id) % salt, build
+    * side replicated `salt` ways, one hot bucket's quadratic
+    * enumeration spread across `salt` reducers, with the same raw-score
+    * pre-filter. Whether any bucket is hot is decided, cheapest first:
+    *  - `rowsPerTable` (the banded relation's row count, observed on
+    *    the job that materialized it) at or under `hotThreshold`: no
+    *    bucket can be hot, no job runs;
+    *  - `spark.graft.lshProbe=false` (plan-only consumers such as
+    *    Explain): no eager job, all buckets cold — the identical pair
+    *    set on every corpus without a hot bucket;
+    *  - otherwise one map-side-combined (bj, bv) count job, the probe.
+    * The pair SET is identical on every route (hot pairs are found from
+    * their a-side salt; cross-band duplicates collapse in the
+    * distinct). */
   private def bucketPairs(cand: DataFrame, id: String,
-                          hotThreshold: Long, salt: Int): DataFrame = {
-    def half(d: DataFrame, as: String) = d.select(col(id).as(as), col("bj"), col("bv"))
-    def plainJoin = half(cand, "a").join(half(cand, "b"), Seq("bj", "bv"))
-      .filter(col("a") < col("b")).select("a", "b")
+                          hotThreshold: Long, salt: Int,
+                          vec: Option[String] = None,
+                          threshold: Option[Double] = None,
+                          rowsPerTable: Option[Long] = None): DataFrame = {
+    graft.functions.VectorExpressions.register(cand.sparkSession)
+    val floor = threshold.map(_ - graft.functions.BucketPairs.ScoreSlack)
+    def cold(rows: DataFrame) = rows
+      .filter(col("bv").isNotNull) // a null key never joined
+      .groupBy("bj", "bv")
+      .agg(collect_list(struct(col(id) +: vec.map(col).toSeq: _*)).as("__m"))
+      .select(call_function("bucket_pairs", col("__m") +: threshold.map(lit).toSeq: _*))
+    def hot(rows: DataFrame) = {
+      def side(as: String) = rows.select(col(id).as(as) +: col("bj") +: col("bv") +:
+        vec.map(v => col(v).as(s"${as}_v")).toSeq: _*)
+      val aSide = side("a").withColumn("__s",
+        (conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
+          .cast("long") % salt).cast("int"))
+      val bSide = side("b").withColumn("__s", explode(array((0 until salt).map(lit): _*)))
+      val j = aSide.join(bSide, Seq("bj", "bv", "__s")).filter(col("a") < col("b"))
+      vec match {
+        case None => j.select("a", "b")
+        case Some(_) =>
+          val scored = j.select(col("a"), col("b"), expr("cosine_sim(a_v, b_v)").as("cos"))
+          floor.fold(scored)(f => scored.filter(col("cos") >= f))
+      }
+    }
+    val probeOn = cand.sparkSession.conf
+      .getOption("spark.graft.lshProbe").forall(_ != "false")
+    def maxBucket = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
+      .agg(coalesce(max(col("__n")), lit(0L)))
+      .head.getLong(0)
+    val allCold = hotThreshold == Long.MaxValue ||
+      rowsPerTable.exists(_ <= hotThreshold) || !probeOn || maxBucket <= hotThreshold
     val pairs =
-      if (hotThreshold == Long.MaxValue) plainJoin
+      if (allCold) cold(cand)
       else {
         // checkpoint only the (bj, bv, __n) COUNTS — bucket-cardinality-
-        // sized. Materializing the full tagged candidate table would
-        // store |bands|×|docs| rows executor-local, dominating the very
-        // stage the salting protects at 100 TB; the tag join instead
-        // recomputes lazily from the (already-checkpointed) signature
-        // scan against this small counts table. Cold and hot buckets
-        // share ONE salt-slotted join (cold rows take slot 0 on both
-        // sides = the plain join; hot rows spread: probe side keyed by
-        // md5(id) % salt, build side exploded over all slots), so the
-        // un-materialized tag join has TWO consumers, not four, and the
-        // pair SET is unchanged (each hot pair found at its a-side
-        // slot; cross-band duplicates collapse in the distinct).
-        // r16: AQE-skew-join-style dispatch — ONE map-side-combined
-        // aggregation job answers "is any bucket actually hot?" before
-        // any salt machinery is planned. When none is (every bench SF;
-        // most corpora), the salted plan is pure overhead — its tag
-        // join recomputes the candidate scan twice and checkpoints a
-        // counts table — and the plain self-join is the identical pair
-        // set (all rows would take slot 0). The r15 always-salted
-        // plans cost the dup tier 1.5-2x of pin on TWO qualified
-        // benches while "protecting" buckets that were never hot; now
-        // the probe (a linear scan-reduce, no checkpoint, no counts
-        // readback) is the only constant cost, and the salt engages
-        // exactly when a bucket crosses the threshold (the
-        // planted-hot-bucket specs still exercise it). Hot corpora pay
-        // the bucket groupBy twice (probe + the checkpointed counts) —
-        // rare by construction, and linear both times.
-        // r17 (advice): the probe is an EAGER job at DataFrame-
-        // construction time, which broke laziness for plan-only
-        // consumers — Explain executed the full banding+groupBy just
-        // to print a plan. spark.graft.lshProbe=false skips it and
-        // constructs the plain self-join (the probe's cold outcome —
-        // the identical pair set on every corpus without a hot
-        // bucket). Plan-inspection mode only: a genuinely hot corpus
-        // needs the probe on (the default) for the salted dispatch.
-        val probeOn = cand.sparkSession.conf
-          .getOption("spark.graft.lshProbe").forall(_ != "false")
-        val maxBucket =
-          if (!probeOn) 0L
-          else cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .agg(coalesce(max(col("__n")), lit(0L)))
-            .head.getLong(0)
-        if (maxBucket <= hotThreshold) plainJoin
-        else {
-          val counts = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .truncated()
-          val tagged = cand.join(counts, Seq("bj", "bv"))
-          def sided(as: String) =
-            tagged.select(col(id).as(as), col("bj"), col("bv"), col("__n"))
-          val aSide = sided("a").withColumn("__s",
-            when(col("__n") <= hotThreshold, lit(0))
-              .otherwise((conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
-                .cast("long") % salt).cast("int")))
-            .drop("__n")
-          val bSide = sided("b").withColumn("__s",
-            explode(when(col("__n") <= hotThreshold, array(lit(0)))
-              .otherwise(array((0 until salt).map(lit): _*))))
-            .drop("__n")
-          aSide.join(bSide, Seq("bj", "bv", "__s"))
-            .filter(col("a") < col("b")).select("a", "b")
-        }
+        // sized; the tag join recomputes lazily from the (already
+        // checkpointed) banded scan against this small table
+        val counts = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
+          .truncated()
+        val tagged = cand.join(counts, Seq("bj", "bv"))
+        val isCold = col("__n") <= hotThreshold
+        cold(tagged.filter(isCold).drop("__n"))
+          .unionAll(hot(tagged.filter(!isCold).drop("__n")))
       }
-    pairs.distinct()
+    vec match {
+      case None => pairs.distinct()
+      case Some(_) =>
+        val rounded = pairs.select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
+        threshold.fold(rounded)(t => rounded.filter(col("cos") >= t)).distinct()
+    }
   }
 
-  /** CO-LOCATED cosine variant of [[bucketPairs]] for the embedding
-    * tier (r17, the ml_dbscan sf10 redesign — SOAK_r17.md §2): `cand`
-    * carries the vector column `v` alongside (id, bj, bv), both bucket
-    * self-join sides project it, and the exact cosine is computed
-    * IN-FLIGHT on the join's output stream, each pair row immediately
-    * narrowing to (a, b, cos). The alternative — pairing ids first and
-    * looking the vectors up afterwards — EXCHANGES the candidate-pair
-    * stream carrying a looked-up dims-wide vector for the second
-    * lookup: ~405M sf10 candidates × ~0.5 KB ≈ 220 GB of shuffle write
-    * (the ENOSPC that failed three consecutive sf10 soaks even after
-    * the r16 fix removed the pair-side SORT). Co-located, the vector
-    * rides only the BANDING shuffle — tables × corpus × vector, LINEAR
-    * in the corpus — and everything pair-sized moves as (a, b, cos),
-    * ~24 B/row. Pair set and values unchanged: same buckets, same
-    * a < b rule, same hot-bucket probe + salt dispatch as
-    * [[bucketPairs]], same round-6 cosine (a pure function of (a, b),
-    * so the distinct on (a, b, cos) collapses cross-band duplicates
-    * exactly as the distinct on (a, b) did). */
-  private def bucketCosinePairs(cand: DataFrame, id: String,
-                                hotThreshold: Long, salt: Int): DataFrame = {
-    def half(d: DataFrame, as: String, vas: String) =
-      d.select(col(id).as(as), col("v").as(vas), col("bj"), col("bv"))
-    def scored(j: DataFrame) = j
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(expr("cosine_sim(va, vb)"), 6).as("cos"))
-    def plainJoin =
-      scored(half(cand, "a", "va").join(half(cand, "b", "vb"), Seq("bj", "bv")))
-    val pairs =
-      if (hotThreshold == Long.MaxValue) plainJoin
-      else {
-        // identical dispatch to bucketPairs: one map-side-combined probe
-        // job (vectors are read, never shuffled — the combine reduces to
-        // (bj, bv, n) before the exchange); plain join when no bucket is
-        // hot, salt-slotted join when one is
-        val probeOn = cand.sparkSession.conf
-          .getOption("spark.graft.lshProbe").forall(_ != "false")
-        val maxBucket =
-          if (!probeOn) 0L
-          else cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .agg(coalesce(max(col("__n")), lit(0L)))
-            .head.getLong(0)
-        if (maxBucket <= hotThreshold) plainJoin
-        else {
-          val counts = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .truncated()
-          val tagged = cand.join(counts, Seq("bj", "bv"))
-          def sided(as: String, vas: String) =
-            tagged.select(col(id).as(as), col("v").as(vas),
-              col("bj"), col("bv"), col("__n"))
-          val aSide = sided("a", "va").withColumn("__s",
-            when(col("__n") <= hotThreshold, lit(0))
-              .otherwise((conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
-                .cast("long") % salt).cast("int")))
-            .drop("__n")
-          val bSide = sided("b", "vb").withColumn("__s",
-            explode(when(col("__n") <= hotThreshold, array(lit(0)))
-              .otherwise(array((0 until salt).map(lit): _*))))
-            .drop("__n")
-          scored(aSide.join(bSide, Seq("bj", "bv", "__s")))
-        }
-      }
-    pairs.distinct()
+  /** [[truncate]] that also returns the frame's row count, observed on
+    * the checkpoint job itself (a `Dataset.observe` metric — no extra
+    * job); None if the metric did not arrive. */
+  private def truncatedCounted(df: DataFrame): (DataFrame, Option[Long]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val t = truncate(df.observe(obs, count(lit(1)).as("n")))
+    val n = scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(30, "s")).getLong(0)).toOption
+    (t, n)
   }
 
   /** Shared signature + banding front-end of the MinHash tiers: one
-    * checkpointed signature row per doc (consumed by banding and both
-    * pair-join sides), exploded to (id, band index, band value). */
+    * checkpointed signature row per doc (consumed by banding and the
+    * pair scoring), exploded to (id, band index, band value), plus the
+    * doc count observed on the checkpoint job (rows per band table). */
   private def bandedSignatures(df: DataFrame, id: String, text: String, n: Int,
-                               bands: Int, rowsPerBand: Int): (DataFrame, DataFrame) = {
-    val sigs = minhashSignatures(df, id, text, n).truncated()
-    (sigs, bandCandidates(sigs, id, bands, rowsPerBand))
+                               bands: Int, rowsPerBand: Int)
+      : (DataFrame, DataFrame, Option[Long]) = {
+    val (sigs, nDocs) = truncatedCounted(minhashSignatures(df, id, text, n))
+    (sigs, bandCandidates(sigs, id, bands, rowsPerBand), nDocs)
   }
 
   /** The (id, bj, bv) banded-candidate relation from a signature table
     * (id, mh0..mh{NumHashes-1}) — exposed so a persisted signature
     * layout can derive its candidate table from the stored signatures
-    * instead of re-hashing the corpus. */
+    * instead of re-hashing the corpus. One scan: every band value is
+    * computed in one projection and exploded to its (bj, bv) row. */
   def bandCandidates(sigs: DataFrame, id: String,
                      bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame = {
     require(bands * rowsPerBand <= NumHashes,
       s"bands×rows must fit the $NumHashes computed permutations")
-    val bandCols = (0 until bands).map { j =>
-      val parts = (0 until rowsPerBand).map(r => s"mh${j * rowsPerBand + r}").mkString(", ")
-      s"concat_ws('_', $parts) AS band$j"
+    val bandVals = (0 until bands).map { j =>
+      concat_ws("_", (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}")): _*)
     }
-    val banded = sigs.selectExpr(Seq(id) ++ bandCols: _*)
-    (0 until bands).map { j =>
-      banded.select(col(id), lit(j).as("bj"), col(s"band$j").as("bv"))
-    }.reduce(_ unionAll _)
+    sigs.select(col(id), posexplode(array(bandVals: _*)).as(Seq("bj", "bv")))
   }
 
   /** Candidate pairs + estimated Jaccard from PRECOMPUTED signature and
@@ -453,13 +401,12 @@ object GraftOps {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0, 3] for 4-band exhaustive search, got $maxHamming")
     val sigs = simhashSignatures(df, id, text).truncated()
-    val ds = sigs.select(col("sig")).distinct().truncated()
-    val bands = (0 until 4).map(j =>
-      ds.selectExpr("sig", s"$j AS bj", s"(sig div ${1L << (8 * j)}) % 256 AS bv"))
-      .reduce(_ unionAll _)
+    val (ds, nSigs) = truncatedCounted(sigs.select(col("sig")).distinct())
+    val bands = ds.select(col("sig"), posexplode(array((0 until 4).map(j =>
+      expr(s"(sig div ${1L << (8 * j)}) % 256")): _*)).as(Seq("bj", "bv")))
     // candidate SIGNATURE pairs (the shared skew-safe enumerator keyed
     // by signature), Hamming-filtered before any doc expansion
-    val sigPairs = bucketPairs(bands, "sig", hotThreshold, salt)
+    val sigPairs = bucketPairs(bands, "sig", hotThreshold, salt, rowsPerTable = nSigs)
       .withColumn("hamming", expr("bit_count(a ^ b)"))
       .filter(col("hamming") <= maxHamming)
       .truncated()
@@ -513,49 +460,44 @@ object GraftOps {
                             dims: Int = EmbLsh.Dims,
                             hotThreshold: Long = Long.MaxValue,
                             salt: Int = 8): DataFrame =
-    embeddingCandidatePairs(df, id, vec, tables, bits, dims, hotThreshold, salt)
-      .filter(col("cos") >= threshold)
+    embeddingPairs(df, id, vec, tables, bits, dims, hotThreshold, salt, Some(threshold))
 
   /** The UNFILTERED candidate stage of [[embeddingNearDupPairs]] —
     * every LSH bucket-collision pair with its exact cosine, BEFORE the
     * threshold filter. Exposed so the scale-witness harness can count
     * candidates-examined vs pairs-emitted (the quantity that separates
     * an output-bound superlinear envelope from a join-fan-out bug);
-    * the production operator is this plan plus the filter, so the two
-    * can never drift. */
+    * the production operator is the same plan with the threshold
+    * handed to the pair core, so the two can never drift. */
   def embeddingCandidatePairs(df: DataFrame, id: String, vec: String,
                               tables: Int = EmbLsh.Tables,
                               bits: Int = EmbLsh.Bits,
                               dims: Int = EmbLsh.Dims,
                               hotThreshold: Long = Long.MaxValue,
-                              salt: Int = 8): DataFrame = {
+                              salt: Int = 8): DataFrame =
+    embeddingPairs(df, id, vec, tables, bits, dims, hotThreshold, salt, None)
+
+  private def embeddingPairs(df: DataFrame, id: String, vec: String,
+                             tables: Int, bits: Int, dims: Int,
+                             hotThreshold: Long, salt: Int,
+                             threshold: Option[Double]): DataFrame = {
     graft.functions.VectorExpressions.register(df.sparkSession)
-    // CO-LOCATED COSINE (r17 — SOAK_r17.md §2, the fix the sf10 soak
-    // forced): the vector rides the banding relation instead of being
-    // looked up per pair. History of the alternative: the original
-    // sort-merge pair⋈vector joins SORTED ~400M sf10 candidate rows ×
-    // a dims-wide double vector (the r15/r16 ENOSPC); the r16
-    // shuffle_hash hint removed the sort but still EXCHANGED the
-    // pair stream carrying its first looked-up vector for the second
-    // lookup — ~220 GB of shuffle write on a ~77 GB scratch disk
-    // (BENCH_sf10_r17.json "failures"). Pair-sized exchanges must
-    // never transport vectors: here the banded table carries
-    // (id, v, b0..bT) — ONE materialization, tables × corpus × vector
-    // shuffle, LINEAR in the corpus — each table leg projects
-    // (id, v, bj, bv), and bucketCosinePairs computes the exact
-    // cosine in the join's output stream, narrowing every pair row to
-    // (a, b, cos) before anything pair-sized moves. Same rows, same
-    // oracle.
-    val buckets = (0 until tables).map(t =>
-      expr(s"lsh_bucket(v, $bits, $dims, $t)").as(s"b$t"))
-    val banded = df
+    // CO-LOCATED COSINE (SOAK_r17.md §2, the fix the sf10 soak forced):
+    // the vector rides the banding relation instead of being looked up
+    // per pair. Pair-sized exchanges must never transport vectors (the
+    // per-pair lookup form wrote ~220 GB of sf10 shuffle): the banded
+    // table carries (id, v, b0..bT) — ONE materialization, one row per
+    // doc — and ONE scan of it explodes to (id, v, bj, bv), a shuffle
+    // LINEAR in tables × corpus × vector. The pair core scores every
+    // pair inside its bucket, so everything pair-sized moves as
+    // (a, b, cos). The checkpoint job also observes the corpus size:
+    // the rows per table, which bound every bucket.
+    val buckets = (0 until tables).map(t => expr(s"lsh_bucket(v, $bits, $dims, $t)"))
+    val (banded, rowsPerTable) = truncatedCounted(df
       .select(col(id), expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
-      .select(col(id) +: col("v") +: buckets: _*)
-      .truncated()
-    val cand = (0 until tables).map(t =>
-      banded.select(col(id), col("v"), lit(t).as("bj"), col(s"b$t").as("bv")))
-      .reduce(_ unionAll _)
-    bucketCosinePairs(cand, id, hotThreshold, salt)
+      .select(col(id), col("v"), array(buckets: _*).as("__b")))
+    val cand = banded.select(col(id), col("v"), posexplode(col("__b")).as(Seq("bj", "bv")))
+    bucketPairs(cand, id, hotThreshold, salt, Some("v"), threshold, rowsPerTable)
   }
 
   /** Winnowing document fingerprints (the MOSS sketch — Schleimer,
@@ -1813,8 +1755,12 @@ object GraftOps {
     val spark = or.sparkSession
     val mode = spark.conf.getOption("spark.graft.triangleBloom")
     if (mode.contains("false")) return None
-    def confLong(k: String, d: Long) =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
+    // numeric, so the 2e6 / 2e8 forms the defaults are written in parse
+    def confLong(k: String, d: Long) = spark.conf.getOption(k).fold(d) { v =>
+      scala.util.Try(BigDecimal(v.trim).toLongExact).getOrElse(
+        throw new IllegalArgumentException(
+          s"$k must be a whole number of edges (e.g. 2000000 or 2e6), got '$v'"))
+    }
     val minEdges = confLong("spark.graft.triangleBloomMinEdges", 2000000L)
     val maxEdges = confLong("spark.graft.triangleBloomMaxEdges", 200000000L)
     val nEdges = or.count() // `or` is checkpointed — a cheap scan

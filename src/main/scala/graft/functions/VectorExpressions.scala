@@ -23,9 +23,21 @@ case class CosineSim(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.CosineSim$$.MODULE$$.cosine($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
+    copy(left = l, right = r)
+}
+
+object CosineSim {
+  /** The one cosine loop: `cosine_sim` and the [[BucketPairs]] kernel
+    * both call it, so every cosine graft reports is the same double. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -36,30 +48,134 @@ case class CosineSim(left: Expression, right: Expression)
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
+/** Per-bucket pair kernel of the LSH candidate stage
+  * (`GraftOps.bucketPairs`): given ONE (bj, bv) bucket's members as
+  * `array<struct<id[, v]>>` (a `collect_list` over the bucket group),
+  * emits every member pair as (a, b) with a < b by the id type's
+  * Catalyst ordering, plus the raw `cos` when members carry an
+  * array<double> vector. This replaces the generic sort-merge bucket
+  * self-join: no ordered in-bucket row stream, no join-side copies,
+  * and the cosine runs [[CosineSim.cosine]] (bit-identical to
+  * `cosine_sim`) straight over the bucket's vectors.
+  *
+  * With a `threshold`, pairs whose raw cosine lies below
+  * `threshold - ScoreSlack` are dropped before they leave the kernel:
+  * `round(c, 6)` moves c by at most 5e-7, so such a pair can never pass
+  * the exact `round(cos, 6) >= threshold` filter the caller still
+  * applies; NaN cosines (zero vectors) are kept, as that filter keeps
+  * them. Members with a null id are skipped (a join on them never
+  * matched); with a threshold, so are members with a null vector.
+  *
+  * A Generator whose codegen calls [[pairs]] through a reference
+  * object, so the enclosing stage stays whole-stage compiled and the
+  * pairs stream out one at a time — a bucket's pair set is never
+  * materialized, only its member list, which is why callers send only
+  * buckets at or under their hot threshold here. */
+case class BucketPairs(child: Expression, threshold: Option[Double])
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.Generator {
+  import org.apache.spark.sql.catalyst.InternalRow
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
+  private def member: StructType =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  private def idType: DataType = member.head.dataType
+  private def scored: Boolean = member.length > 1
+
+  override def prettyName: String = "bucket_pairs"
+
+  override def elementSchema: StructType = {
+    val ab = StructType(Seq(StructField("a", idType, nullable = false),
+      StructField("b", idType, nullable = false)))
+    if (scored) ab.add("cos", DoubleType, nullable = true) else ab
+  }
+
+  @transient private lazy val idOrdering =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+  @transient private lazy val floor =
+    threshold.fold(Double.NegativeInfinity)(_ - BucketPairs.ScoreSlack)
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val m = child.eval(input)
+    if (m == null) Iterator.empty else pairs(m.asInstanceOf[ArrayData])
+  }
+
+  def pairs(m: ArrayData): Iterator[InternalRow] = {
+    val width = member.length
+    val n = m.numElements()
+    val ids = new Array[Any](n)
+    val vs = new Array[ArrayData](n)
+    var k = 0
+    var i = 0
+    while (i < n) {
+      if (!m.isNullAt(i)) {
+        val r = m.getStruct(i, width)
+        val keep = !r.isNullAt(0) &&
+          !(scored && threshold.isDefined && r.isNullAt(1))
+        if (keep) {
+          ids(k) = r.get(0, idType)
+          if (scored && !r.isNullAt(1)) vs(k) = r.getArray(1)
+          k += 1
+        }
+      }
+      i += 1
+    }
+    val live = k // not `size`: inside the Iterator that is Iterator.size
+    new Iterator[InternalRow] {
+      private var x = 0
+      private var y = 0
+      private var nextRow: InternalRow = advance()
+
+      // the next emitted pair after (x, y) in row-major a-index order
+      private def advance(): InternalRow = {
+        while (x < live) {
+          y += 1
+          if (y >= live) { x += 1; y = x }
+          else {
+            val c = idOrdering.compare(ids(x), ids(y))
+            if (c != 0) {
+              val (a, b) = if (c < 0) (ids(x), ids(y)) else (ids(y), ids(x))
+              if (!scored) return InternalRow(a, b)
+              val va = vs(x); val vb = vs(y)
+              if (va == null || vb == null) return InternalRow(a, b, null)
+              val cos = CosineSim.cosine(va, vb)
+              if (!(cos < floor)) return InternalRow(a, b, cos)
+            }
+          }
+        }
+        null
+      }
+
+      override def hasNext: Boolean = nextRow != null
+      override def next(): InternalRow = {
+        val r = nextRow
+        nextRow = advance()
+        r
+      }
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+    val m = child.genCode(ctx)
+    val self = ctx.addReferenceObj("bucketPairs", this, classOf[BucketPairs].getName)
+    ev.copy(code = code"""
+      |${m.code}
+      |scala.collection.Iterator ${ev.value} = ${m.isNull}
+      |  ? scala.collection.Iterator$$.MODULE$$.empty() : $self.pairs(${m.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): BucketPairs = copy(child = c)
+}
+
+object BucketPairs {
+  /** Raw-score margin of the kernel's pre-filter: twice the largest
+    * shift `round(c, 6)` can apply, so the filter never drops a pair
+    * the exact rounded filter would keep. */
+  val ScoreSlack = 1e-6
 }
 
 /** Native dot product over array<double> — CosineSim minus the
@@ -353,28 +469,35 @@ object VectorExpressions {
     KMinDistinct(arr, exprs(1).eval().asInstanceOf[Int])
   }
 
+  private[graft] def bucketPairsBuilder(exprs: Seq[Expression]): Expression = {
+    val threshold =
+      if (exprs.length > 1) Some(Cast(exprs(1), DoubleType).eval().asInstanceOf[Double])
+      else None
+    BucketPairs(exprs.head, threshold)
+  }
+
+  /** Every native function graft registers: (SQL name, builder,
+    * expression class). [[register]] and `graft.GraftExtensions` both
+    * walk this one list, so a function cannot be registered in one
+    * place and missed in the other. */
+  val functions: Seq[(String, Seq[Expression] => Expression, Class[_])] = Seq(
+    ("cosine_sim", cosineBuilder, classOf[CosineSim]),
+    ("dot_product", dotBuilder, classOf[DotProduct]),
+    ("lsh_bucket", lshBuilder, classOf[LshBucket]),
+    ("lsh_probes", lshProbesBuilder, classOf[LshProbes]),
+    ("top_k_pairs", topKBuilder, classOf[TopKPairs]),
+    ("kmin_distinct", kminBuilder, classOf[KMinDistinct]),
+    ("vec_sum", vecSumBuilder, classOf[VecSum]),
+    ("vint_pack", vintPackBuilder, classOf[VIntPack]),
+    ("vint_unpack", vintUnpackBuilder, classOf[VIntUnpack]),
+    ("common_prefix_length", commonPrefixBuilder, classOf[CommonPrefixLength]),
+    ("bucket_pairs", bucketPairsBuilder, classOf[BucketPairs]))
+
   /** Idempotently register graft's native functions on a session so
     * plans can reference them via `expr("cosine_sim(a, b)")` / SQL. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", lshBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_probes", lshProbesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_pairs", topKBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmin_distinct", kminBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sum", vecSumBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vint_pack", vintPackBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vint_unpack", vintUnpackBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "common_prefix_length", commonPrefixBuilder, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, builder, _) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.api.Memo.MemoOps
@@ -45,6 +45,33 @@ object Similarity {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
   }
+
+  /** The [[NumTables]] sign-bit buckets of a vector column, as one
+    * array (element t = table t). */
+  private def tableBuckets(v: String, dims: Int = 64): Column =
+    array((0 until NumTables).map(t => expr(s"lsh_bucket($v, $BitsPerTable, $dims, $t)")): _*)
+
+  /** The corpus side of the ANN tiers: ONE scan, exploded to one
+    * (vec_id, bj, bv) row per table. */
+  private def corpusBuckets(e0: DataFrame): DataFrame =
+    e0.select(col("vec_id"), posexplode(tableBuckets("v")).as(Seq("bj", "bv")))
+
+  /** The query side of the multiprobe tiers: per (qid, table) the base
+    * bucket plus `nprobe` flipped buckets (`lsh_probes`), one
+    * (qid, bj, bv) row each, from ONE projection of `(qid, v)`. */
+  private def probeRows(q: DataFrame, dims: Int, nprobe: Int): DataFrame =
+    q.select(col("qid"), posexplode(array((0 until NumTables).map(t =>
+        expr(s"lsh_probes(v, $BitsPerTable, $dims, $t, $nprobe)")): _*)).as(Seq("bj", "probes")))
+      .select(col("qid"), col("bj"), explode(col("probes")).as("bv"))
+
+  /** Distinct (qid, vec_id) candidates colliding in any table: one
+    * equi-join of the corpus buckets against the broadcast query
+    * buckets on (bj, bv), whatever the table count. */
+  private def candidateIds(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.join(broadcast(queries), Seq("bj", "bv"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"))
+      .distinct()
 
   /** Exact cosine top-k for the first NumQueries vector ids. */
   def cosineTopk(spark: SparkSession, dir: String): DataFrame = {
@@ -117,16 +144,11 @@ object Similarity {
     val qAug = e0.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         expr("concat(v, array(CAST(0.0 AS DOUBLE)))").as("aqv"))
-    val eb = itemsAug.select(col("vec_id") +: (0 until NumTables).map(t =>
-      expr(s"lsh_bucket(av, $BitsPerTable, $MipsAugDim, $t)").as(s"b$t")): _*)
-    val ids = (0 until NumTables).map { t =>
-      val qp = qAug.select(col("qid"), explode(expr(
-        s"lsh_probes(aqv, $BitsPerTable, $MipsAugDim, $t, $MultiProbeWide)")).as("bv"))
-      eb.select(col("vec_id"), col(s"b$t").as("bv"))
-        .join(broadcast(qp), Seq("bv"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"))
-    }.reduce(_ unionAll _).distinct()
+    val eb = itemsAug.select(col("vec_id"),
+      posexplode(tableBuckets("av", MipsAugDim)).as(Seq("bj", "bv")))
+    val qp = probeRows(qAug.select(col("qid"), col("aqv").as("v")),
+      MipsAugDim, MultiProbeWide)
+    val ids = candidateIds(eb, qp)
     val scored = ids
       .join(broadcast(qAug.select(col("qid"), col("qv"))), Seq("qid"))
       .join(items, Seq("vec_id"))
@@ -327,20 +349,13 @@ object Similarity {
     * union. Shuffle volume ∝ tables × docs, never docs². */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e0 = emb(spark, dir)
-    val buckets = (0 until NumTables).map(t =>
-      expr(s"lsh_bucket(v, $BitsPerTable, 64, $t)").as(s"b$t"))
-    val e = e0.select(col("vec_id") +: col("v") +: buckets: _*)
-    val q = e.filter(col("vec_id") < NumQueries)
-    // candidate union across tables: dedup on the bare id pair (the
+    val q = e0.filter(col("vec_id") < NumQueries)
+    // candidates across all tables: dedup on the bare id pair (the
     // vectors are functionally determined by the ids — carrying them
     // through the distinct would shuffle ~64 doubles per row per table),
     // then join the vectors back once
-    val ids = (0 until NumTables).map { t =>
-      e.select(col("vec_id"), col(s"b$t").as("bv"))
-        .join(broadcast(q.select(col("vec_id").as("qid"), col(s"b$t").as("bv"))), Seq("bv"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"))
-    }.reduce(_ unionAll _).distinct()
+    val ids = candidateIds(corpusBuckets(e0),
+      q.select(col("vec_id").as("qid"), posexplode(tableBuckets("v")).as(Seq("bj", "bv"))))
     // final ranking through the bounded-heap aggregate: ≤ k rows per
     // query leave each scan task (row_number-over-qid would sort the
     // whole candidate set on |Q| tasks)
@@ -382,18 +397,9 @@ object Similarity {
     annLshMultiprobeOf(MultiProbeWide)(spark, dir)
   private def annLshMultiprobeOf(nprobe: Int)(spark: SparkSession, dir: String): DataFrame = {
     val e0 = emb(spark, dir)
-    val buckets = (0 until NumTables).map(t =>
-      expr(s"lsh_bucket(v, $BitsPerTable, 64, $t)").as(s"b$t"))
-    val e = e0.select(col("vec_id") +: buckets: _*)
     val q0 = e0.filter(col("vec_id") < NumQueries)
-    val ids = (0 until NumTables).map { t =>
-      val qp = q0.select(col("vec_id").as("qid"),
-        explode(expr(s"lsh_probes(v, $BitsPerTable, 64, $t, $nprobe)")).as("bv"))
-      e.select(col("vec_id"), col(s"b$t").as("bv"))
-        .join(broadcast(qp), Seq("bv"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"))
-    }.reduce(_ unionAll _).distinct()
+    val ids = candidateIds(corpusBuckets(e0),
+      probeRows(q0.select(col("vec_id").as("qid"), col("v")), 64, nprobe))
     val scored = ids
       .join(broadcast(q0.select(col("vec_id").as("qid"), col("v").as("qv"))), Seq("qid"))
       .join(e0, Seq("vec_id"))
@@ -462,11 +468,7 @@ object Similarity {
   val KnnK = 3
   def simKnnGraph(spark: SparkSession, dir: String): DataFrame = {
     val e0 = emb(spark, dir)
-    val buckets = (0 until NumTables).map(t =>
-      expr(s"lsh_bucket(v, $BitsPerTable, 64, $t)"))
-    val cand = e0.select(col("vec_id"),
-        posexplode(array(buckets: _*)).as(Seq("bj", "bv")))
-    val pairs = graft.api.GraftOps.bucketKnnPairs(cand, "vec_id")
+    val pairs = graft.api.GraftOps.bucketKnnPairs(corpusBuckets(e0), "vec_id")
     val scored = pairs
       .join(e0.select(col("vec_id").as("a"), col("v").as("qv")), Seq("a"))
       .join(e0.select(col("vec_id").as("b"), col("v")), Seq("b"))

@@ -25,7 +25,8 @@ class EmbeddingDedupSpec extends SparkSpec {
 
   test("bucketed path never materializes the cross product") {
     // the analyzed plan must contain no cartesian/cross join — candidate
-    // generation goes through the (bj, bv) equi-join
+    // generation groups each (bj, bv) bucket once and the native
+    // bucket_pairs kernel enumerates its a < b pairs
     val plan = Dedup.dedupEmbedding(spark, sf001)
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("Cross"), s"cross join in plan:\n${plan.take(1500)}")

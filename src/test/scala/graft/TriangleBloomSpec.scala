@@ -25,6 +25,10 @@ class TriangleBloomSpec extends SparkSpec {
     // triangleBloomMinEdges, so the unset-conf plan is the plain one —
     // same rows either way (and no probe function needs registering)
     assert(rows(Graph.graphTriangles(spark, sf)) == off)
+    // the edge bounds parse in the 2e6 form their defaults are written in
+    spark.conf.set("spark.graft.triangleBloomMinEdges", "2e6")
+    try assert(rows(Graph.graphTriangles(spark, sf)) == off)
+    finally spark.conf.unset("spark.graft.triangleBloomMinEdges")
   }
 
   test("graph_clustering_coeff: Bloom-on equals Bloom-off") {
