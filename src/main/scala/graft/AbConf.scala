@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** A/B harness for a boolean conf-gated lever on one registered query:
   * times n control-bracketed passes with the conf unset (arm A) and n
-  * with it "true" (arm B), memos reset before every pass so each arm
-  * pays full compute (the Requalify discipline). Dir comes from
+  * with it "true" (arm B), memos released before every pass so each
+  * arm pays full compute (the Requalify discipline). Dir comes from
   * SPARK_GRAFT_SF_DIR so the same invocation drives sf0.1 or a scale
   * soak dir. Row counts are asserted equal across arms — an A/B that
   * changes the answer is a bug, not a measurement.
@@ -15,12 +14,7 @@ object AbConf {
   def main(args: Array[String]): Unit = {
     val (name, confKey) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = SparkEntry.queries(name)
     val controlPin = 1.95
@@ -28,7 +22,6 @@ object AbConf {
     def arm(label: String, on: Boolean): Unit = (1 to n).foreach { i =>
       if (on) spark.conf.set(confKey, "true") else spark.conf.unset(confKey)
       SparkEntry.releaseMemos(spark)
-      graft.sources.IoRoundtrip.reset()
       val ctl = Bench.controlOnly(spark)
       val t0 = System.nanoTime()
       val rows = fn(spark, dir).count()

@@ -177,15 +177,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // codegen-fallback sentinel (r15): a janino bailout is a silent
     // perf cliff no correctness gate sees (the Louvain loop ran
     // INTERPRETED for rounds, SOAK_r14.md §3) — count every fallback
@@ -287,20 +279,18 @@ object Bench {
           lname -> (System.nanoTime() - t0) / 1e9
         }
     def pass(): Map[String, Double] = {
-      // per-pass memo resets (SuffixArray included since r14: without
-      // it pass 2 rode pass 1's memoized suffix array and min-of-2
-      // recorded the 0.08 s READOUT as text_suffix_array's pin — the
-      // sf1 soak then read a bogus 25x "superlinearity" that was pure
-      // accounting). Every memo family pays its build in every pass
-      // (producer-charged, like pagerank/louvain); the io-family
-      // layout writes stay unreset BY CONVENTION (their pins document
-      // the pass-1 write charge). clearCache drops CacheManager state:
-      // cache()d fragments are keyed by canonicalized plan, so pass
-      // 2's identical plans would silently reuse pass 1's materialized
-      // data and under-report their cost.
-      operators.Graph.reset(); operators.Classify.reset()
-      operators.Similarity.reset(); operators.Bpe.reset()
-      operators.SuffixArray.reset(); operators.CurationQuality.reset()
+      // per-pass memo release (without it pass 2 rode pass 1's
+      // memoized suffix array and min-of-2 recorded the 0.08 s READOUT
+      // as text_suffix_array's pin — the sf1 soak then read a bogus 25x
+      // "superlinearity" that was pure accounting). Every released memo
+      // pays its build in every pass (producer-charged, like
+      // pagerank/louvain); session-lived layouts (Memo.layout: the io
+      // family's writes, the bucketed tables) are written once, so
+      // their pins carry the pass-1 write charge. clearCache drops
+      // CacheManager state: cache()d fragments are keyed by
+      // canonicalized plan, so pass 2's identical plans would silently
+      // reuse pass 1's materialized data and under-report their cost.
+      SparkEntry.releaseMemos(spark)
       spark.catalog.clearCache()
       // BETWEEN families, release every memoized localCheckpoint block
       // (r14): memos never cross family boundaries (the SparkEntry

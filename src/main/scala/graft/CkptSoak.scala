@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Durability-path prover at scale (r13 verdict item 7): runs iterative
@@ -16,12 +15,7 @@ object CkptSoak {
   def main(args: Array[String]): Unit = {
     val (sfDir, ckptDir) = (args(0), args(1))
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setCheckpointDir(ckptDir)
     def fingerprint(name: String): (Double, Long, Long) = {
       SparkEntry.releaseMemos(spark)

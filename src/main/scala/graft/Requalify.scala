@@ -1,13 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Control-bracketed re-qualification harness for a single bench entry
   * (the BASELINE.md protocol: treat deltas under ~1.3x as noise and
   * re-measure n>=3 under clean controls before calling a regression).
   * Each pass runs the skew-SMJ control probe (Bench.controlOnly, pin
   * 1.95 s) immediately before the timed query, so every measurement
-  * carries its own time-local load adjustment. Memoized cross-query
-  * state is dropped before every pass — a timed pass pays full cost.
+  * carries its own time-local load adjustment. Released memos
+  * (SparkEntry.releaseMemos) are dropped before every pass — a timed
+  * pass pays full cost; session-lived layouts are written once.
   *
   * Usage: runMain graft.Requalify <query> [nPasses=3]
   */
@@ -15,20 +15,12 @@ object Requalify {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val n = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = SparkEntry.queries(name)
     val controlPin = 1.95
     (1 to n).foreach { i =>
-      graft.operators.Graph.reset(); graft.operators.SuffixArray.reset()
-      graft.operators.Classify.reset(); graft.sources.IoRoundtrip.reset()
-      graft.operators.Similarity.reset(); graft.operators.Bpe.reset()
-      graft.operators.CurationQuality.reset()
+      SparkEntry.releaseMemos(spark)
       spark.catalog.clearCache()
       val ctl = Bench.controlOnly(spark)
       val t0 = System.nanoTime()

@@ -27,12 +27,7 @@ import org.apache.spark.sql.functions._
 object ScaleData {
   def main(args: Array[String]): Unit = {
     val (src, dst, n) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
     build(spark, src, dst, n)
     spark.stop()
   }

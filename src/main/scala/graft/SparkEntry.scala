@@ -25,24 +25,39 @@ object SparkEntry {
   /** All implemented operators, one QueryDef per SURVEY.md §2 row. */
   def all: Seq[QueryDef] = families.flatMap(_._2)
 
-  /** Drop every memoized DataFrame AND free its executor block storage.
-    * The memo maps hold localCheckpoint-backed frames whose blocks
-    * otherwise live until the ContextCleaner notices the dropped
-    * references — across a 305-query sweep at sf1 that unbounded
-    * accumulation OOM'd an 8 g driver (SOAK_r13.md item 3). Clearing
-    * the maps FIRST means nothing can reference a freed block; the
-    * unpersist then releases deterministically instead of at GC's
-    * leisure. Called by Verify between families and SAFE in any
+  /** Drop every released memo ([[graft.api.Memo.keyed]]) AND free its
+    * executor block storage. Memoized localCheckpoint-backed frames
+    * otherwise keep their blocks until the ContextCleaner notices the
+    * dropped references — across a 305-query sweep at sf1 that
+    * unbounded accumulation OOM'd an 8 g driver (SOAK_r13.md item 3).
+    * Called by Verify and Bench between families and SAFE in any
     * long-lived session embedding the library: release walks only the
-    * [[graft.api.Memo]] registry of graft-created checkpoint/cache
-    * entries, so a host application's own persisted RDDs and cached
-    * tables on the same SparkContext are untouched (r14 advice: the
-    * earlier getPersistentRDDs+clearCache sweep truncated host lineage
-    * and dropped host caches). */
-  def releaseMemos(spark: SparkSession): Unit = {
-    Graph.reset(); Classify.reset(); Similarity.reset()
-    Bpe.reset(); SuffixArray.reset(); CurationQuality.reset()
-    graft.api.Memo.releaseAll(spark)
+    * [[graft.api.Memo]] registry of graft-created entries, so a host
+    * application's own persisted RDDs and cached tables on the same
+    * SparkContext are untouched. Session-lived layouts
+    * ([[graft.api.Memo.layout]]) survive it. */
+  def releaseMemos(spark: SparkSession): Unit = graft.api.Memo.releaseAll(spark)
+
+  /** Width of every harness session: SPARK_GRAFT_CPUS, else every
+    * processor the JVM sees. */
+  private def harnessCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** The one session every main and the test suite run in: local[cores]
+    * with one shuffle partition per core, UTC, UI off, WARN logging,
+    * and naive parquet timestamps read as plain TIMESTAMP (UTC
+    * instants) whichever table is read first — analysis fixes that
+    * type, so a session without it plans different queries. */
+  def localSession(cores: Int = harnessCores): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /** One-time persisted-layout builders for incremental entries whose

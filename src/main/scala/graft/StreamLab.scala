@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off throughput lab for the stateful streaming paths (r12 verdict
@@ -18,10 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object StreamLab {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
+    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions")
 
     def measure(q: org.apache.spark.sql.streaming.StreamingQuery,
                 label: String): Unit = try {
@@ -51,7 +48,7 @@ object StreamLab {
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         changelog.toString)
       try body finally {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", defaultParts)
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         spark.conf.unset(
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.api.Memo.MemoOps
 
 /** Candidate-vs-output witness for the soak's output-bound claims
@@ -29,16 +28,12 @@ object Witness {
     val wanted =
       if (args.length > 1) args.drop(1).toSet
       else Set("ml_dbscan", "mm_pipeline", "dedup_recall_report")
-    // decade dirs need wider shuffles than the bench default: the
+    // decade dirs need wider shuffles than one partition per core: the
     // pre-distinct candidate stream at sf10 is billions of rows, and
     // 32 reduce partitions put ~100M-row hash aggregates on one task
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     def emit(entry: String, n: Long, candidates: Long, emitted: Long,
              extra: String = ""): Unit = {

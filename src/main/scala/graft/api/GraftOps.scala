@@ -634,75 +634,62 @@ object GraftOps {
     * spherical centroid. Returns (cid = seed id, cv array<double>). */
   def kmeansCosine(df: DataFrame, id: String, vec: String,
                    k: Int = 8, iters: Int = 3): DataFrame =
-    kmeansLoop(df, id, vec, k, iters, "cosine_sim(v, c.cv)")
+    kmeansGrouped(df, Seq(), id, vec, k, iters, "cosine_sim(v, c.cv)")
 
-  /** Shared Lloyd scaffolding for both metrics — only the per-row
-    * assignment score differs (argmax over the broadcast centroid
-    * array; ties → lowest cid). Seeds, vec_sum update, 9 dp rounding
-    * and empty-cluster carryover are metric-independent. */
-  private def kmeansLoop(df: DataFrame, id: String, vec: String,
-                         k: Int, iters: Int, scoreSql: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    val e = df.select(col(id).as("__kid"),
-      expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
-    var cents = e.orderBy(md5(col("__kid").cast("string")), col("__kid"))
-      .limit(k)
-      .select(col("__kid").as("cid"), col("v").as("cv"))
-      .truncated()
-    for (_ <- 1 to iters) {
-      val centArr = cents.agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
-      val assigned = e.crossJoin(broadcast(centArr))
-        .select(col("__kid"), col("v"), nearestCid("cs", scoreSql).as("cid"))
-      val updated = assigned.groupBy("cid")
-        .agg(expr("vec_sum(v)").as("sv"), count(lit(1)).as("n"))
-        .select(col("cid"),
-          expr("transform(sv, x -> round(x / CAST(n AS DOUBLE), 9))").as("cv"))
-      // checkpoint per round: k rows, and it flattens the iter lineage
-      cents = cents.select(col("cid"), col("cv").as("__old"))
-        .join(updated, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cv"), col("__old")).as("cv"))
-        .truncated()
-    }
-    cents
-  }
+  /** Euclidean assignment score: 2·(x·c) − (c·c), which is argmin
+    * ‖x−c‖² with the per-row-constant x·x term dropped — the exact
+    * formula a SQL oracle replays with list_dot_product. */
+  val L2Score = "2 * dot_product(v, c.cv) - dot_product(c.cv, c.cv)"
 
-  /** GROUPED Euclidean k-means: one Lloyd loop trains an independent
-    * k-means per distinct value of `grpCols`, returning
-    * (grpCols..., cid, cv). Semantics per group are EXACTLY
-    * [[kmeansL2]] run on that group's rows — seeds are the group's k
-    * (md5(id), id)-smallest vectors (the window form of
-    * orderBy().limit(k)), assignment is the same broadcast argmax with
-    * the same surrogate score and lowest-cid tie-break (the codebook
-    * array arrives by a broadcast equi-join on the group instead of a
-    * cross join), and the centroid update is the same
-    * vec_sum/count + 9-dp round with empty clusters carrying state.
+  /** The ONE Lloyd loop: trains an independent k-means per distinct
+    * value of `grpCols` (no columns = one k-means over the whole
+    * input), returning (grpCols..., cid, cv). Only the per-row
+    * assignment `score` differs between metrics; per group:
+    *   - seeds are the group's k (md5(id), id)-smallest vectors: a
+    *     bounded TakeOrdered heap with no group columns, its window
+    *     form per group otherwise;
+    *   - assignment is the broadcast argmax of `score` over the
+    *     group's centroid array ([[nearestCid]]: ties → lowest cid),
+    *     joined on the group — a broadcast nested-loop join when there
+    *     are no group columns;
+    *   - the update is vec_sum/count + 9-dp round, empty clusters
+    *     carrying their previous centroid.
     * r17 (guide §1.2 step 1 / §2.4): the PQ tiers trained PqM — and
-    * per-cell IVFPQ PqM × cells — SEPARATE kmeansL2 loops, each paying
+    * per-cell IVFPQ PqM × cells — SEPARATE loops, each paying
     * (1 + iters) eager checkpoint jobs and its own corpus-slice scans;
     * one grouped loop pays (1 + iters) jobs TOTAL and scans the
     * training relation once per iteration for all groups. */
-  def kmeansL2Grouped(df: DataFrame, grpCols: Seq[String], id: String,
-                      vec: String, k: Int = 8, iters: Int = 3): DataFrame = {
+  def kmeansGrouped(df: DataFrame, grpCols: Seq[String], id: String,
+                    vec: String, k: Int = 8, iters: Int = 3,
+                    score: String = L2Score): DataFrame = {
     graft.functions.VectorExpressions.register(df.sparkSession)
     val gcols = grpCols.map(col)
     val e = df.select(gcols :+ col(id).as("__kid") :+
       expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"): _*)
-    var cents = e.withColumn("__rn", row_number().over(
-        Window.partitionBy(gcols: _*)
-          .orderBy(md5(col("__kid").cast("string")), col("__kid"))))
-      .filter(col("__rn") <= k)
+    val seedOrder = Seq(md5(col("__kid").cast("string")), col("__kid"))
+    // the ungrouped form is not the window over an empty partitionBy:
+    // that plans the same TakeOrdered heap, but under AQE, whose
+    // checkpoint forgets the single-partition layout round 1's join
+    // would otherwise reuse (one more shuffle job per training)
+    val seeds =
+      if (grpCols.isEmpty) e.orderBy(seedOrder: _*).limit(k)
+      else e.withColumn("__rn", row_number().over(
+          Window.partitionBy(gcols: _*).orderBy(seedOrder: _*)))
+        .filter(col("__rn") <= k)
+    var cents = seeds
       .select(gcols :+ col("__kid").as("cid") :+ col("v").as("cv"): _*)
       .truncated()
     for (_ <- 1 to iters) {
       val centArr = cents.groupBy(gcols: _*)
         .agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
       val assigned = e.join(broadcast(centArr), grpCols)
-        .select(gcols :+ col("v") :+
-          nearestCid("cs", "2 * dot_product(v, c.cv) - dot_product(c.cv, c.cv)").as("cid"): _*)
+        .select(gcols :+ col("v") :+ nearestCid("cs", score).as("cid"): _*)
       val updated = assigned.groupBy(gcols :+ col("cid"): _*)
         .agg(expr("vec_sum(v)").as("sv"), count(lit(1)).as("n"))
         .select(gcols :+ col("cid") :+
           expr("transform(sv, x -> round(x / CAST(n AS DOUBLE), 9))").as("cv"): _*)
+      // checkpoint per round: k rows per group, and it flattens the
+      // iter lineage
       cents = cents.select(gcols :+ col("cid") :+ col("cv").as("__old"): _*)
         .join(updated, grpCols :+ "cid", "left")
         .select(gcols :+ col("cid") :+ coalesce(col("cv"), col("__old")).as("cv"): _*)
@@ -780,16 +767,10 @@ object GraftOps {
 
   /** Euclidean (L2) k-means — the [[kmeansCosine]] sibling used by
     * product quantization, where subspace codebooks minimize squared
-    * distance. Identical deterministic scaffolding (hash-ordered seeds,
-    * broadcast-argmax assignment with zero shuffle/expansion, native
-    * vec_sum update, 9 dp per-round centroid rounding); the assignment
-    * criterion maximizes 2·(x·c) − (c·c), which is argmin ‖x−c‖² with
-    * the per-row-constant x·x term dropped — the exact formula a SQL
-    * oracle replays with list_dot_product. */
+    * distance: the same loop with the [[L2Score]] assignment. */
   def kmeansL2(df: DataFrame, id: String, vec: String,
                k: Int = 8, iters: Int = 3): DataFrame =
-    kmeansLoop(df, id, vec, k, iters,
-      "2 * dot_product(v, c.cv) - dot_product(c.cv, c.cv)")
+    kmeansGrouped(df, Seq(), id, vec, k, iters)
 
   /** Per-key sessionization on an epoch-micros column: split on gaps. */
   def sessionize(df: DataFrame, key: String, tsUs: String, gapUs: Long,

@@ -24,8 +24,35 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * sql-package-scoped). Reliable `checkpoint()` frames register too;
   * unpersisting an RDD that was never block-persisted is a no-op, so
   * the release path is uniform across both truncation modes.
+  *
+  * The same object is the ONE registry of values graft memoizes across
+  * calls (trained models, shared graph inputs, written layout paths),
+  * keyed by (applicationId, dir, tag). Tags are namespaced by module
+  * ("graph.pagerank", "io.format") so two modules never share a key.
+  * Two lifetimes:
+  *  - [[keyed]] entries are dropped by [[releaseAll]], so the next
+  *    call pays the real build again;
+  *  - [[layout]] entries live for the session: they name on-disk
+  *    layouts that are written once per (session, dir) and hold no
+  *    block a release could free.
   */
 object Memo {
+  private final case class Entry(value: Any, sessionLived: Boolean)
+  private val entries = scala.collection.concurrent.TrieMap[(String, String, String), Entry]()
+
+  private def lookup[T](spark: SparkSession, dir: String, tag: String,
+                        sessionLived: Boolean)(build: => T): T =
+    entries.getOrElseUpdate((spark.sparkContext.applicationId, dir, tag),
+      Entry(build, sessionLived)).value.asInstanceOf[T]
+
+  /** Memoize `build` per (session, dir, tag) until the next [[releaseAll]]. */
+  def keyed[T](spark: SparkSession, dir: String, tag: String)(build: => T): T =
+    lookup(spark, dir, tag, sessionLived = false)(build)
+
+  /** Memoize `build` per (session, dir, tag) for the whole session. */
+  def layout[T](spark: SparkSession, dir: String, tag: String)(build: => T): T =
+    lookup(spark, dir, tag, sessionLived = true)(build)
+
   private val rddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   private val cachedFrames =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Dataset[_]]()
@@ -51,11 +78,13 @@ object Memo {
     cached
   }
 
-  /** Free graft-created memo state ONLY: unpersist the tracked
-    * checkpoint block RDDs still persistent, drop the tracked
-    * CacheManager entries. Host-app persisted RDDs and cached tables
-    * are untouched. */
+  /** Free graft-created memo state ONLY: drop every [[keyed]] entry
+    * first (so nothing still references a block about to be freed),
+    * then unpersist the tracked checkpoint block RDDs still persistent
+    * and drop the tracked CacheManager entries. [[layout]] entries,
+    * host-app persisted RDDs and cached tables are untouched. */
   def releaseAll(spark: SparkSession): Unit = {
+    entries.filterInPlace((_, e) => e.sessionLived)
     val persistent = spark.sparkContext.getPersistentRDDs
     rddIds.forEach { id =>
       persistent.get(id).foreach(_.unpersist(blocking = false))

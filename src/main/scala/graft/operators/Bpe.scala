@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
+import graft.api.Memo
 import graft.sources.Tables
 import graft.api.GraftOps.TruncateOps
 
@@ -29,9 +30,6 @@ object Bpe {
   val BpeMerges = 16
   val Eow = "</w>"
 
-  private val memo = scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]()
-  def reset(): Unit = memo.clear()
-
   private def dict(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -41,8 +39,7 @@ object Bpe {
   /** (merges, finalSymbols) memoized per (session, dir): train and
     * apply share one training run, like the PageRank/kmeans memos. */
   def trained(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir,
-      trainOn(dict(spark, dir), BpeMerges))
+    Memo.keyed(spark, dir, "bpe.trained")(trainOn(dict(spark, dir), BpeMerges))
 
   /** Training core over any (w, freq) dictionary — spec entry point.
     * `rounds` must stay below the pair-exhaustion point of the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Memo
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 import graft.functions.TextFns
@@ -85,18 +86,11 @@ object Classify {
     min
   }
 
-  // trained weights memoized per (session, dir): apply/ensemble reuse
-  // the model instead of re-running the sequential pass
-  private val memo = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Drop memoized models (benchmarks call this so a timed pass pays
-    * the real training cost). */
-  def reset(): Unit = memo.clear()
-
-  /** Serial SGD (reference semantics): 1 partition, doc_id order. */
+  /** Serial SGD (reference semantics): 1 partition, doc_id order.
+    * Trained weights are memoized per (session, dir): apply/ensemble
+    * reuse the model instead of re-running the sequential pass. */
   def train(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir,
-      trainUncached(spark, dir).memoized())
+    Memo.keyed(spark, dir, "classify.train")(trainUncached(spark, dir).memoized())
 
   private def trainUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Memo
 import graft.sources.Tables
 
 /** Physical-layout operators: the 100 TB join strategy made concrete.
@@ -23,10 +24,6 @@ object ScaleOps {
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
-  // bucketed managed tables are written once per (session, dir) — the
-  // point is that the QUERY runs shuffle-free; the write is load-time
-  private val written = scala.collection.concurrent.TrieMap[String, (String, String)]()
-
   // the in-memory catalog forgets tables across JVMs but the warehouse
   // directory persists — clear both or a rerun hits LOCATION_ALREADY_EXISTS
   private[operators] def dropStale(spark: SparkSession, name: String): Unit = {
@@ -37,8 +34,10 @@ object ScaleOps {
     if (fs.exists(path)) fs.delete(path, true)
   }
 
+  // bucketed managed tables are written once per (session, dir) — the
+  // point is that the QUERY runs shuffle-free; the write is load-time
   private def bucketedTables(spark: SparkSession, dir: String): (String, String) =
-    written.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "scale.bucketed") {
       val suffix = dirKey(dir)
       val (lt, ot) = (s"graft_lineitem_b$suffix", s"graft_orders_b$suffix")
       dropStale(spark, lt); dropStale(spark, ot)
@@ -49,7 +48,7 @@ object ScaleOps {
         Tables.orders(spark, dir).select("o_orderkey", "o_orderpriority"),
         ot, "o_orderkey", NBuckets)
       (lt, ot)
-    })
+    }
 
   /** The co-bucketed join itself (pre-aggregation) — exposed so the
     * spec can assert its physical plan contains no Exchange. */
@@ -76,9 +75,8 @@ object ScaleOps {
   // path AND min day cached together: deriving the slice literal later
   // would full-scan every partition of the layout whose whole point is
   // opening one directory
-  private val partitioned = scala.collection.concurrent.TrieMap[String, (String, Long)]()
   def partitionedEvents(spark: SparkSession, dir: String): (String, Long) =
-    partitioned.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "scale.eventsByDay") {
       val path = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
         s"graft_events_byday${dirKey(dir)}").toString
@@ -87,7 +85,7 @@ object ScaleOps {
       byDay.write.mode("overwrite").partitionBy("day").parquet(path)
       val minDay = byDay.agg(min(col("day"))).head().getLong(0)
       (path, minDay)
-    })
+    }
   def partitionedEventsPath(spark: SparkSession, dir: String): String =
     partitionedEvents(spark, dir)._1
 
@@ -116,9 +114,8 @@ object ScaleOps {
     * away before the pruning rule sees it) whose key column carries
     * the layout's EXACT inferred partition type (a cast on the
     * partition side defeats the rule). */
-  private val calDimMemo = scala.collection.concurrent.TrieMap[String, String]()
   def calendarDimPath(spark: SparkSession, dir: String): String =
-    calDimMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "scale.calendarDim") {
       val (path, _) = partitionedEvents(spark, dir)
       val dimPath = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
@@ -127,7 +124,7 @@ object ScaleOps {
         .withColumn("dow", pmod(col("day").cast("long"), lit(7L)).cast("int"))
         .write.mode("overwrite").parquet(dimPath)
       dimPath
-    })
+    }
 
   /** DYNAMIC partition pruning — q34's sibling where the day slice
     * arrives via a dim-table JOIN instead of a literal: the calendar
@@ -197,9 +194,8 @@ object ScaleOps {
     * later would full-scan the layout whose whole point is skipping.
     * ZOrderSpec measures the row-group skip against an unclustered
     * copy of the same rows. */
-  private val zordered = scala.collection.concurrent.TrieMap[String, (String, Long, Long)]()
   def zorderedLineitem(spark: SparkSession, dir: String): (String, Long, Long) =
-    zordered.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "scale.zorder") {
       val path = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
         s"graft_lineitem_z${dirKey(dir)}").toString
@@ -214,7 +210,7 @@ object ScaleOps {
       val b = li.agg(min(col("l_partkey")), max(col("l_partkey")),
         min(col("l_suppkey")), max(col("l_suppkey"))).head()
       (path, b.getLong(1) - b.getLong(0), b.getLong(3) - b.getLong(2))
-    })
+    }
 
   /** 2-D box aggregate over the z-ordered layout: both range
     * predicates reach the parquet scan as literals (bounds read once
@@ -263,10 +259,8 @@ object ScaleOps {
     * table min. Written once per (session, dir); returns
     * (path, pkSpan, skSpan, minShipDate, daySpan) — bounds cached at
     * write time so deriving box literals later costs no scan. */
-  private val z3ordered =
-    scala.collection.concurrent.TrieMap[String, (String, Long, Long, String, Long)]()
   def z3orderedLineitem(spark: SparkSession, dir: String): (String, Long, Long, String, Long) =
-    z3ordered.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "scale.z3order") {
       val path = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
         s"graft_lineitem_z3${dirKey(dir)}").toString
@@ -305,7 +299,7 @@ object ScaleOps {
         .drop("z")
         .write.mode("overwrite").parquet(path)
       (path, pkSpan, skSpan, d0.toString, daySpan)
-    })
+    }
 
   /** 3-D box aggregate over the z3 layout: part range × supplier range
     * × ship-date window, every predicate on a RAW column (so all three

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Memo
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 
@@ -25,11 +26,9 @@ object Similarity {
 
   // trained spherical k-means centroids memoized per (session, dir):
   // ml_kmeans and sim_ann_ivf_kmeans share one Lloyd training instead
-  // of re-running it (the Graph.pagerank memo pattern; Bench resets)
-  private val kmMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
-  def reset(): Unit = { kmMemo.clear(); opqMemo.clear(); pcaMemo.clear() }
+  // of re-running it (the Graph.pagerank memo pattern)
   private def trainedCents(spark: SparkSession, dir: String): DataFrame =
-    kmMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir,
+    Memo.keyed(spark, dir, "similarity.kmeans")(
       graft.api.GraftOps.kmeansCosine(
         Tables.embeddings(spark, dir), "vec_id", "embedding", KmK, KmIters)
         .memoized())
@@ -861,15 +860,14 @@ object Similarity {
     }
     r
   }
-  private val opqMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def opqRotationFn(spark: SparkSession, dir: String): String =
-    opqMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.keyed(spark, dir, "similarity.opqRotation") {
       val r = learnOpqRotation(spark, dir)
       val name = "graft_opq_rotate_" + java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       graft.functions.MatVec.registerRotation(spark, name, r)
       name
-    })
+    }
 
   private[graft] def learnOpqRotation(spark: SparkSession, dir: String): Array[Array[Double]] = {
     graft.functions.VectorExpressions.register(spark)
@@ -890,8 +888,8 @@ object Similarity {
       graft.functions.MatVec.registerRotation(spark, rotFn, r)
       val rot = x.select(col("vec_id"), expr(s"$rotFn(v)").as("v"))
       // r17: all PqM subspace codebooks from ONE grouped Lloyd loop
-      // per OPQ pass (identical per-subspace math; see kmeansL2Grouped)
-      val allBooks = graft.api.GraftOps.kmeansL2Grouped(
+      // per OPQ pass (identical per-subspace math; see kmeansGrouped)
+      val allBooks = graft.api.GraftOps.kmeansGrouped(
           rot.select(col("vec_id"),
             explode(expr(s"transform(sequence(0, ${PqM - 1}), m -> " +
               s"struct(m AS m, slice(v, m * $PqSub + 1, $PqSub) AS x))")).as("s"))
@@ -1001,17 +999,16 @@ object Similarity {
     * certifies ≥0.99 cosine to the long-run eigenvector and the
     * Rayleigh quotient's monotone growth. */
   val PcaIters = 24
-  private val pcaMemo = scala.collection.concurrent.TrieMap[String, Array[Double]]()
   private[graft] def pcaComponent(spark: SparkSession, dir: String): Array[Double] = {
     graft.functions.VectorExpressions.register(spark)
-    pcaMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.keyed(spark, dir, "similarity.pca") {
       val d = Ed
       val gFlat = emb(spark, dir)
         .select(expr("flatten(transform(v, a -> transform(v, b -> a * b)))").as("op"))
         .agg(expr("vec_sum(op)").as("g")).head().getSeq[Double](0).toArray
       val g = Array.tabulate(d, d)((i, j) => grid(gFlat(i * d + j), MGrid))
       powerIterate(g, PcaIters)
-    })
+    }
   }
 
   /** Fixed-round power iteration with per-step grid snap — shared with
@@ -1090,7 +1087,7 @@ object Similarity {
     }
     // per-subspace codebooks; checkpointed — each feeds encode AND luts.
     // r17: ONE grouped Lloyd loop trains all PqM subspaces together
-    // (kmeansL2Grouped — identical per-subspace seeds/assignment/update,
+    // (kmeansGrouped — identical per-subspace seeds/assignment/update,
     // (1+iters) jobs total instead of PqM×(1+iters))
     val books: Seq[DataFrame] = {
       val vecSql = rotFn match {
@@ -1103,7 +1100,7 @@ object Similarity {
             s"struct(m AS m, slice($vecSql, m * $PqSub + 1, $PqSub) AS x))")).as("s"))
         .select(col("s.m").as("__m"), col("vec_id"), col("s.x").as("x"))
       val all = graft.api.GraftOps
-        .kmeansL2Grouped(slices, Seq("__m"), "vec_id", "x", PqK, PqIters)
+        .kmeansGrouped(slices, Seq("__m"), "vec_id", "x", PqK, PqIters)
         .memoized()
       (0 until PqM).map(m => all.filter(col("__m") === m).select("cid", "cv"))
     }
@@ -1235,12 +1232,12 @@ object Similarity {
       .select(col("s.m").as("__grp_m"), col("ccell"), col("vec_id"), col("s.x").as("x"))
     val books: Seq[DataFrame] =
       if (!perCell) {
-        val all = graft.api.GraftOps.kmeansL2Grouped(
+        val all = graft.api.GraftOps.kmeansGrouped(
             residSlices, Seq("__grp_m"), "vec_id", "x", PqK, PqIters)
           .memoized()
         (0 until PqM).map(m => all.filter(col("__grp_m") === m).select("cid", "cv"))
       } else {
-        val all = graft.api.GraftOps.kmeansL2Grouped(
+        val all = graft.api.GraftOps.kmeansGrouped(
             residSlices, Seq("__grp_m", "ccell"), "vec_id", "x", PqK, PqIters)
           .memoized()
         (0 until PqM).map(m =>

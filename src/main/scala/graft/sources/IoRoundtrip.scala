@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.QueryDef
+import graft.api.Memo
 
 /** Multi-format source/sink surface: the documents table round-trips
   * through JSON-lines, ORC and CSV sinks and is read back through the
@@ -25,15 +26,8 @@ object IoRoundtrip {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private val memo = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Drop the memoized written roots (both the format-roundtrip and
-    * schema-evolution layouts) so a timed pass pays the full
-    * write+read cost (benchmark harnesses call this between passes). */
-  def reset(): Unit = { memo.clear(); evoMemo.clear(); partMemo.clear(); snapMemo.clear() }
-
   private def writtenRoot(spark: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "io.format") {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       val root = java.nio.file.Paths
@@ -45,7 +39,7 @@ object IoRoundtrip {
           .option("header", "true").save(s"$root/$f")
       }
       root
-    })
+    }
 
   def roundtrip(spark: SparkSession, dir: String): DataFrame = {
     val root = writtenRoot(spark, dir)
@@ -79,9 +73,8 @@ object IoRoundtrip {
     * deterministic event_id % 2. mergeSchema is the one-line fix
     * every long-lived 100 TB table eventually needs; its cost
     * (footer-merge across files) is the documented trade. */
-  private val evoMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def evolutionRoot(spark: SparkSession, dir: String): String =
-    evoMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "io.evolution") {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       val root = java.nio.file.Paths
@@ -95,7 +88,7 @@ object IoRoundtrip {
       ev.filter(col("event_id") % 2 === 1)
         .write.mode("overwrite").parquet(s"$root/epoch=2")
       root
-    })
+    }
 
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val root = evolutionRoot(spark, dir)
@@ -130,9 +123,8 @@ object IoRoundtrip {
     * The registered query reports per-type counts + exact cent sums
     * from the pruned read; the oracle recomputes from the raw feed. */
   val PrunedTypes: Seq[String] = Seq("click", "purchase")
-  private val partMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def partitionedRoot(spark: SparkSession, dir: String): String =
-    partMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "io.partitioned") {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       val root = java.nio.file.Paths
@@ -143,7 +135,7 @@ object IoRoundtrip {
           col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(root)
       root
-    })
+    }
 
   /** The pruned frame BEFORE aggregation — spec entry point for the
     * partitionFilters plan assertion. */
@@ -176,11 +168,10 @@ object IoRoundtrip {
     * stat aggregations and a |days|-row outer join — the row data of
     * unchanged partitions is read for stats only here; a real
     * lakehouse manifest already carries them in footers. */
-  private val snapMemo = scala.collection.concurrent.TrieMap[String, String]()
   val SnapCutoffDays = 15L
   val SnapLateDays = 5L
   private def snapshotRoot(spark: SparkSession, dir: String): String =
-    snapMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.layout(spark, dir, "io.snapshot") {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       val root = java.nio.file.Paths
@@ -194,7 +185,7 @@ object IoRoundtrip {
           !(col("day") < minDay + SnapLateDays && col("event_id") % 2 === 1))
         .write.mode("overwrite").partitionBy("day").parquet(root)
       root
-    })
+    }
 
   def ioSnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
     val (fullPath, _) = graft.operators.ScaleOps.partitionedEvents(spark, dir)

@@ -14,31 +14,31 @@ class CurationMemoSpec extends SparkSpec {
 
   test("pipelines agree cold vs riding family memos, pass after pass") {
     // cold: each pipeline builds its own prefix memos
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     val v4cold = rows(CurationQuality.pipelineV4(spark, sf))
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     val v5cold = rows(CurationQuality.pipelineV5(spark, sf))
     // warm: declaration order — v2 builds cleanIds, v3 builds calmIds,
     // v4/v5 ride
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     val v2 = rows(CurationQuality.pipelineV2(spark, sf))
     val v3 = rows(CurationQuality.pipelineV3(spark, sf))
     assert(rows(CurationQuality.pipelineV4(spark, sf)) == v4cold)
     assert(rows(CurationQuality.pipelineV5(spark, sf)) == v5cold)
     // second pass over a reset memo map reproduces everything
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     assert(rows(CurationQuality.pipelineV2(spark, sf)) == v2)
     assert(rows(CurationQuality.pipelineV3(spark, sf)) == v3)
   }
 
   test("qualityFilter/qualityClassifier memo round-trips exactly") {
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     val qf1 = rows(CurationQuality.qualityFilter(spark, sf))
     val qc1 = rows(CurationQuality.qualityClassifier(spark, sf))
     // memoized second read
     assert(rows(CurationQuality.qualityFilter(spark, sf)) == qf1)
     // fresh build after reset
-    CurationQuality.reset()
+    SparkEntry.releaseMemos(spark)
     assert(rows(CurationQuality.qualityFilter(spark, sf)) == qf1)
     assert(rows(CurationQuality.qualityClassifier(spark, sf)) == qc1)
   }

@@ -24,11 +24,11 @@ class GraphScaleSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq.sorted
 
   test("pagerank iteration is broadcast-independent (shuffle-join path identical)") {
-    Graph.reset()
+    SparkEntry.releaseMemos(spark)
     val default = rows(Graph.pagerank(spark, sf))
-    Graph.reset()
+    SparkEntry.releaseMemos(spark)
     val noBcast = withBroadcastDisabled { rows(Graph.pagerank(spark, sf)) }
-    Graph.reset()
+    SparkEntry.releaseMemos(spark)
     assert(default.nonEmpty && default == noBcast)
   }
 
@@ -47,9 +47,9 @@ class GraphScaleSpec extends SparkSpec {
   test("pagerank plan carries no forced broadcast hint") {
     // a ResolvedHint in the analyzed plan = a hard-coded broadcast() call
     // that would bypass the size threshold at any scale
-    Graph.reset()
+    SparkEntry.releaseMemos(spark)
     val analyzed = Graph.pagerank(spark, sf).queryExecution.analyzed.toString
-    Graph.reset()
+    SparkEntry.releaseMemos(spark)
     assert(!analyzed.contains("UnresolvedHint") && !analyzed.contains("ResolvedHint"),
       s"forced hint in pagerank plan:\n${analyzed.take(1500)}")
   }

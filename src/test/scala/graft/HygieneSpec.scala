@@ -96,6 +96,29 @@ class HygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  /** Code lines (comments excluded) outside `owner` that contain `token`. */
+  private def outsideOwner(owner: String, token: String): Seq[String] =
+    for {
+      (p, lines) <- sources
+      if p.getFileName.toString != owner
+      (line, i) <- lines.zipWithIndex
+      if !isComment(line) && line.contains(token)
+    } yield s"$p:${i + 1}: ${line.trim.take(120)}"
+
+  test("memo maps live only in the Memo registry") {
+    // one keyed registry owns every cross-call memo and its release;
+    // a module-local map would escape SparkEntry.releaseMemos
+    val hits = outsideOwner("Memo.scala", "TrieMap")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("harness sessions come only from SparkEntry.localSession") {
+    // one builder owns the harness session conf, so no main can drift
+    // from the session Verify and Bench run in
+    val hits = outsideOwner("SparkEntry.scala", "SparkSession.builder()")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("reference identifiers appear only in provenance comments") {
     // citing reference file:line for SEMANTICS in Scaladoc is required;
     // the same identifiers in CODE would smell like a renamed copy

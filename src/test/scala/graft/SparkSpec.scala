@@ -3,22 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session; local[4]). */
+/** Shared session for all suites: one JVM-wide session, built by the
+  * same SparkEntry.localSession the mains use, on local[4]. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps read as plain TIMESTAMP (raw micros =
-      // UTC instants) everywhere, not session-state-dependent NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
   val Sf = "/root/testdata/sf0.001"
 }
 
