@@ -71,10 +71,10 @@ object SparkEntry {
     * entry's 8+4-round cold base build billed to the 2-round warm
     * path). Bench runs these untimed-but-REPORTED (a `layouts` map in
     * the JSON) under SPARK_GRAFT_PREBUILD=1. Only entries that
-    * exclusively own their layout belong here — shared layouts
-    * (persistedSymEdges, the minhash signature tables, the suffix
-    * ranks memo) are charged to their documented producer entries,
-    * which run earlier in declaration order. */
+    * exclusively own their layout belong here — shared layouts (the
+    * minhash signature tables, the suffix ranks memo) are charged to
+    * their documented producer entries, which run earlier in
+    * declaration order. */
   def layoutPrebuilds: Seq[(String, String, (SparkSession, String) => Unit)] = Seq(
     ("pagerank_incremental", "layout_pr_base",
       (s, d) => { Graph.persistedPagerankBase(s, d).count(); () }),

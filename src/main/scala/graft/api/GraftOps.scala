@@ -923,12 +923,18 @@ object GraftOps {
   }
 
   /** [[connectedComponents]] over an ALREADY-SYMMETRIC (src, dst) edge
-    * table — the entry point for a persisted src-partitioned layout
-    * (e.g. a bucketed edge table): no symmetrize, no re-materialization;
-    * the layout IS the materialization, and its bucket partitioning
+    * table — the entry point for a src-partitioned checkpoint (e.g.
+    * `Graph.persistedSymEdges`): no symmetrize, no re-materialization;
+    * the checkpoint IS the materialization, and its hash partitioning
     * rides through every round's edge-side join with zero Exchange. */
   def connectedComponentsSym(edges: DataFrame, iters: Int): DataFrame = {
-    val init = edges.select(col("src").as("v")).distinct()
+    // the node set from dst (= src on a symmetric graph): a distinct
+    // over the partitioning column would run both aggregation phases in
+    // one task, each holding a full Tungsten page however few rows it
+    // has — on a src-partitioned edge checkpoint at sf0.001 that alone
+    // raised graph_fixpoint's heap peak from ~150 to ~205 MB
+    // (local[4], 2 GB heap). Over dst the partial phase shuffles first.
+    val init = edges.select(col("dst").as("v")).distinct()
       .select(col("v"), col("v").as("dist"))
     // min-label propagation IS Bellman-Ford on zero-cost edges with
     // init = own id: runs on the shared delta-iteration core (frontier
@@ -1027,11 +1033,10 @@ object GraftOps {
 
   /** Shared graph prep: src-partitioned edges, out-degrees, and the
     * node×jump base table. `prePartitioned = true` declares the input
-    * already partitioned on `srcCol` (a persisted bucketed layout):
-    * the explicit repartition AND the edge cache are skipped — the
-    * layout's scan reports the partitioning, every downstream src-keyed
-    * join/agg rides it with zero Exchange, and at 100 TB the edge table
-    * is re-read from its bucketed files instead of pinned in memory. */
+    * already hash-partitioned on `srcCol` (a checkpoint such as
+    * `Graph.persistedSymEdges`): the explicit repartition AND the edge
+    * cache are skipped — the checkpoint reports the partitioning and
+    * every downstream src-keyed join/agg rides it with zero Exchange. */
   private def prGraph(edges0: DataFrame, srcCol: String, dstCol: String,
                       sources: Seq[Long],
                       prePartitioned: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
@@ -1751,8 +1756,9 @@ object GraftOps {
     else {
       val bf = or.select(xxhash64(col("src"), col("dst")).as("h"))
         .stat.bloomFilter("h", math.max(nEdges, 1000L), 0.03)
-      val bc = spark.sparkContext.broadcast(bf)
-      val name = s"graft_tri_bloom_${triBloomIds.incrementAndGet()}"
+      // both are released with the memos (Memo.releaseAll)
+      val bc = Memo.registerBroadcast(spark.sparkContext.broadcast(bf))
+      val name = Memo.registerFunction(spark, s"graft_tri_bloom_${triBloomIds.incrementAndGet()}")
       graft.functions.BloomProbe.register(spark, name, bc)
       Some(name)
     }
@@ -2414,7 +2420,7 @@ object GraftOps {
   }
 
   /** [[bfsHops]] over an already-symmetric (src, dst) edge table — the
-    * persisted-layout entry point (see connectedComponentsSym). */
+    * partitioned-checkpoint entry point (see connectedComponentsSym). */
   def bfsHopsSym(edges: DataFrame, sources: Seq[Long], rounds: Int): DataFrame =
     relaxRounds(edges.withColumn("w", lit(1L)), edges.sparkSession, sources, rounds)
 

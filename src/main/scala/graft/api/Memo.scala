@@ -1,6 +1,8 @@
 package graft.api
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Registry of memoized executor state CREATED BY THIS LIBRARY, so that
   * [[graft.SparkEntry.releaseMemos]] can free graft's blocks without
@@ -24,6 +26,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * sql-package-scoped). Reliable `checkpoint()` frames register too;
   * unpersisting an RDD that was never block-persisted is a no-op, so
   * the release path is uniform across both truncation modes.
+  *
+  * Broadcasts and session temp functions graft creates while it builds
+  * a plan (the triangle tier's Bloom probe) are tracked the same way:
+  * release destroys the broadcast and drops the function.
   *
   * The same object is the ONE registry of values graft memoizes across
   * calls (trained models, shared graph inputs, written layout paths),
@@ -78,11 +84,30 @@ object Memo {
     cached
   }
 
+  private val broadcasts = java.util.concurrent.ConcurrentHashMap.newKeySet[Broadcast[_]]()
+  private val functions =
+    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
+
+  /** Record a broadcast graft created; [[releaseAll]] destroys it. */
+  def registerBroadcast[T](bc: Broadcast[T]): Broadcast[T] = {
+    broadcasts.add(bc)
+    bc
+  }
+
+  /** Record a temp function graft registered on `spark`; [[releaseAll]]
+    * drops it from that session's function registry. */
+  def registerFunction(spark: SparkSession, name: String): String = {
+    functions.put(name, spark)
+    name
+  }
+
   /** Free graft-created memo state ONLY: drop every [[keyed]] entry
     * first (so nothing still references a block about to be freed),
-    * then unpersist the tracked checkpoint block RDDs still persistent
-    * and drop the tracked CacheManager entries. [[layout]] entries,
-    * host-app persisted RDDs and cached tables are untouched. */
+    * then unpersist the tracked checkpoint block RDDs still persistent,
+    * drop the tracked CacheManager entries and temp functions, and
+    * destroy the tracked broadcasts. [[layout]] entries, host-app
+    * persisted RDDs, cached tables, functions and broadcasts are
+    * untouched. */
   def releaseAll(spark: SparkSession): Unit = {
     entries.filterInPlace((_, e) => e.sessionLived)
     val persistent = spark.sparkContext.getPersistentRDDs
@@ -92,10 +117,16 @@ object Memo {
     rddIds.clear()
     cachedFrames.forEach(_.unpersist(blocking = false))
     cachedFrames.clear()
+    functions.forEach((name, s) =>
+      s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name)))
+    functions.clear()
+    broadcasts.forEach(_.destroy())
+    broadcasts.clear()
   }
 
   /** Count of tracked (not-yet-released) memo entries — spec hook. */
-  def trackedCount: Int = rddIds.size() + cachedFrames.size()
+  def trackedCount: Int =
+    rddIds.size() + cachedFrames.size() + broadcasts.size() + functions.size()
 
   /** `.memoized()` / `.memoCached()` — tracked siblings of
     * `localCheckpoint()` / `cache()`. Every memoization inside graft

@@ -16,16 +16,16 @@ import graft.api.GraftOps.TruncateOps
   * (a4/FindMaxPageRankNodes.java). The reference runs per-iteration
   * MapReduce jobs with log-space mass; we keep linear-space doubles
   * (fine at these magnitudes) and express one iteration as a single
-  * join+groupBy over a cached, pre-partitioned edge table.
+  * aggregation over the src-partitioned edge checkpoint.
   *
   * Graph: the bipartite supplier↔part network from lineitem (both
   * directions, so no dangling nodes and mass is conserved exactly:
   * Σr = 1 every round).
   *
-  * Scale: edges are repartitioned by src ONCE and cached; each
-  * iteration then shuffles only the (node, rank) table — the classic
-  * co-partitioned PageRank layout. AQE handles skewed high-degree
-  * nodes. 5 iterations = 5 shuffles of |V| rows, not |E|.
+  * Scale: edges are hash-partitioned by src ONCE and checkpointed
+  * ([[persistedSymEdges]]); each iteration then shuffles only the
+  * per-edge messages on dst, never the edge table itself. AQE handles
+  * skewed high-degree nodes. 5 iterations = 5 message shuffles.
   */
 object Graph {
   val Alpha = 0.15
@@ -43,29 +43,41 @@ object Graph {
         .select(col("l_suppkey"), col("l_partkey")).distinct()
         .memoized())
 
-  /** Persisted src-partitioned symmetric edge layout with fused degree
-    * — the reference's PartitionGraph.java:37-118 (RangePartitioner +
-    * persisted SequenceFile layout that downstream PageRank reads
-    * shuffle-free), re-expressed as a bucketed managed table (the q32
-    * pattern): (src, dst, d) bucketed+sorted on src, written ONCE per
-    * (session, dir). Every iterative consumer (pagerank, CC, BFS) then
-    * joins its |V|-sized state table against the bucketed scan, whose
-    * reported hash partitioning satisfies the join's distribution —
-    * zero Exchange on the |E| edge side, on every round AND on every
-    * cold start (the table outlives the session; a fresh JVM re-reads
-    * the same files instead of re-paying the edge shuffle). */
-  def persistedSymEdges(spark: SparkSession, dir: String): DataFrame = {
-    val name = Memo.layout(spark, dir, "graph.symEdges") {
-      val t = s"graft_edges_b${ScaleOps.dirKey(dir)}"
-      ScaleOps.dropStale(spark, t)
+  /** Src-partitioned symmetric edge relation with fused degree
+    * (src, dst, d) — the reference's PartitionGraph.java:37-118
+    * (RangePartitioner + persisted layout that downstream PageRank reads
+    * shuffle-free), re-expressed as one checkpoint hash-partitioned on
+    * src into the session's shuffle-partition count. The checkpoint's
+    * LogicalRDD reports that partitioning, so every iterative consumer
+    * (pagerank, CC, BFS) joins its |V|-sized state against it with zero
+    * Exchange on the |E| edge side. Built once per (session, dir) and
+    * freed by [[graft.SparkEntry.releaseMemos]], like every other
+    * graft checkpoint. */
+  def persistedSymEdges(spark: SparkSession, dir: String): DataFrame =
+    Memo.keyed(spark, dir, "graph.symEdges") {
       val fwd = liPairs(spark, dir).select(col("l_suppkey").as("src"),
         (col("l_partkey") + PartOffset).as("dst"))
       val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      Tables.writeBucketed(edges.join(deg, "src"), t, "src", ScaleOps.NBuckets)
-      t
+      plannedStatically(edges.join(deg, "src")
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("src")))
+        .truncated()
     }
-    spark.table(name)
+
+  /** `df` with its physical plan fixed WITHOUT adaptive execution. A
+    * checkpoint's LogicalRDD takes its partitioning from the plan it
+    * ran, and an adaptive plan reports none, so a checkpoint of an
+    * adaptive `repartition` would forget its hash partitioning. AQE is
+    * switched off only while this one plan is built, and restored
+    * before any job runs. */
+  private def plannedStatically(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.conf
+    val aqe = "spark.sql.adaptive.enabled"
+    val was = conf.get(aqe)
+    conf.set(aqe, "false")
+    try df.queryExecution.executedPlan
+    finally conf.set(aqe, was)
+    df
   }
 
   /** Distinct co-purchase part pairs (a < b, same order) — shared by
@@ -87,45 +99,33 @@ object Graph {
 
   private def computeRanks(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // the persisted bucketed layout replaces the old per-session
-    // repartition+cache: the bucketed scan reports hash partitioning on
-    // src, so every iteration's edge⋈rank join shuffles ONLY the
-    // |V|-sized rank table — and unlike a cache, the layout survives
-    // the session, so cold starts never re-pay the |E| shuffle either.
-    // Degree is fused into the table at write time (no per-round
-    // ranks⋈deg stage); r/d uses identical per-src operands, so the
-    // float path — and the unrolled oracle — are unchanged
+    // degree is fused into the edge checkpoint, so r/d per edge row uses
+    // the same per-src operands as the unrolled oracle
     val edgesD = persistedSymEdges(spark, dir)
-
-    val srcDf = Sources.toDF("v")
-      .withColumn("jump0", lit(1.0 / Sources.length))
-    // sources are nodes even when absent from the edge set — otherwise
+    // one row per source carrying its personalized-jump share; the
+    // sources stay nodes even when absent from the edge set, otherwise
     // their jump mass would silently vanish and Σr < 1
-    val nodes = edgesD.select(col("src").as("v"))
-      .unionAll(srcDf.select(col("v"))).distinct().memoCached()
-    // node table with its personalized-jump share, built & cached ONCE;
-    // each iteration is then a single contrib join against it
-    val base = nodes.join(srcDf, Seq("v"), "left")
-      .select(col("v"), coalesce(col("jump0"), lit(0.0)).as("jump0"))
-      .memoCached()
-    var ranks = base.select(col("v"), col("jump0").as("r"))
-    // NO broadcast hints on the |V|-sized rank/contrib tables: a hint
-    // bypasses Spark's size threshold and would force a billion-vertex
-    // rank table into driver/executor memory at 100× scale. AQE
-    // broadcasts them at runtime while they fit and keeps the
-    // co-partitioned shuffle join beyond that (one |V| shuffle per
-    // iteration either way — GraphScaleSpec asserts the iteration stays
-    // correct with autoBroadcastJoinThreshold = -1).
-    for (_ <- 1 to Iters) {
-      val contrib = edgesD.join(ranks, edgesD("src") === ranks("v"))
-        .groupBy(col("dst").as("v"))
-        .agg(sum(col("r") / col("d")).as("c"))
-      ranks = base
-        .join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          (lit(1 - Alpha) * coalesce(col("c"), lit(0.0)) +
-           lit(Alpha) * col("jump0")).as("r"))
-    }
+    val jumps = Sources.toDF("v")
+      .select(col("v"), lit(null).cast("double").as("c"), lit(1.0 / Sources.length).as("jump0"))
+    // one aggregation per round over messages ∪ jump rows. The graph is
+    // symmetric, so every node with an edge receives a message and the
+    // group set is exactly the node set. NO broadcast hints on the
+    // |V|-sized rank table: a hint bypasses Spark's size threshold; AQE
+    // broadcasts it at runtime while it fits (GraphScaleSpec asserts
+    // the iteration stays correct with autoBroadcastJoinThreshold = -1)
+    def step(messages: DataFrame): DataFrame =
+      messages.select(col("v"), col("c"), lit(null).cast("double").as("jump0"))
+        .unionAll(jumps)
+        .groupBy("v")
+        .agg((lit(1 - Alpha) * coalesce(sum(col("c")), lit(0.0)) +
+          lit(Alpha) * coalesce(max(col("jump0")), lit(0.0))).as("r"))
+    // round 1 reads the initial rank (the jump share) off each edge's src
+    var ranks = step(edgesD.select(col("dst").as("v"),
+      (when(col("src").isin(Sources: _*), lit(1.0 / Sources.length))
+        .otherwise(lit(0.0)) / col("d")).as("c")))
+    for (_ <- 2 to Iters)
+      ranks = step(edgesD.join(ranks, edgesD("src") === ranks("v"))
+        .select(col("dst").as("v"), (col("r") / col("d")).as("c")))
     ranks.select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
   }
 
@@ -161,10 +161,10 @@ object Graph {
     * `GraftOps.personalizedPageRank` core. */
   def pagerankDirected(spark: SparkSession, dir: String): DataFrame = {
     // the DIRECTED supplier→part edges are exactly the src < PartOffset
-    // half of the persisted symmetric layout (suppliers key below the
-    // offset, parts above): the filter preserves the scan's bucket
+    // half of the symmetric edge checkpoint (suppliers key below the
+    // offset, parts above): the filter preserves the checkpoint's hash
     // partitioning on src, so the directed iteration also runs with a
-    // shuffle-free edge side off the same on-disk table
+    // shuffle-free edge side
     val edges = persistedSymEdges(spark, dir)
       .filter(col("src") < PartOffset).select("src", "dst")
     graft.api.GraftOps.personalizedPageRank(edges, "src", "dst", Sources, Alpha, Iters,
@@ -349,7 +349,7 @@ object Graph {
     * each degree. Scan + two groupBys (map-side partial both times);
     * shuffle volume ∝ |V| then ∝ distinct degrees. */
   def graphDegree(spark: SparkSession, dir: String): DataFrame =
-    // degrees are already fused into the persisted layout: one distinct
+    // degrees are already fused into the edge checkpoint: one distinct
     // over (src, d) — shuffle ∝ |V| — then the tiny distribution groupBy,
     // instead of re-counting over the |E| edge rows
     persistedSymEdges(spark, dir)
@@ -363,7 +363,7 @@ object Graph {
     * component once rounds ≥ diameter — the spec asserts convergence at
     * test scale). A FIXED round count keeps the oracle exact.
     *
-    * Scale: each round is one join against the cached edge table + one
+    * Scale: each round is one join against the edge checkpoint + one
     * min-groupBy — the same co-partitioned layout as PageRank (shuffle
     * ∝ |V| per round, not |E|). At 100 TB diameters, use
     * `graph_components_logn` below — large-star/small-star contraction,
@@ -1069,9 +1069,8 @@ object Graph {
     * discipline applied to communities: the 8+4-round cold Louvain on
     * the base (80%) graph is a LOAD-TIME artifact, written ONCE per
     * (session, dir) as a v-bucketed managed table
-    * (`graft_louvain_base_b*`) that outlives the session, exactly like
-    * the minhash signature layout (Dedup.persistedMinhashLayout) and
-    * the src-bucketed edge layout. The incremental entry then READS
+    * (`graft_louvain_base_b*`), exactly like the minhash signature
+    * layout (Dedup.persistedMinhashLayout). The incremental entry then READS
     * base labels and pays only the warm sweeps — the actual cost shape
     * of a daily delta-ingest community job. Values are unchanged
     * (labels are (long, long); the parquet roundtrip is exact), so the
@@ -1794,8 +1793,8 @@ object Graph {
     * the log-spaced k-spine (k = 2^0..2^11, covering the degree
     * range at any SF) joins both tiny histograms by a conditional
     * sum. All integer until the single φ division per row.
-    * Scale: one |E| join against the |V| degree table (the persisted
-    * layout already carries the src degree — only the dst side
+    * Scale: one |E| join against the |V| degree table (the edge
+    * checkpoint already carries the src degree — only the dst side
     * joins), then everything is degree-distribution-sized. */
   val RichClubLogMax = 11 // k spine = 2^0 .. 2^11, spans both SFs' degree ranges
   def graphRichClub(spark: SparkSession, dir: String): DataFrame = {
@@ -1846,7 +1845,7 @@ object Graph {
     * Σ_{v: deg v = k} Σ_{u∈N(v)} deg(u) / (k·n_k) — every v of
     * degree k contributes exactly k neighbor terms, so the
     * denominator is exact integers and the numerator one |E| join
-    * against the degree table (the persisted layout already carries
+    * against the degree table (the edge checkpoint already carries
     * the src degree; only the dst side joins). Rising curve =
     * assortative, falling = hubs prefer leaves. */
   def graphKnnCurve(spark: SparkSession, dir: String): DataFrame = {
@@ -1997,7 +1996,7 @@ object Graph {
     * into the node's dst-sorted neighbor list.
     *
     * Scale: neighbor indexing is a row_number window partitioned by src
-    * — partition-local on the bucketed edge layout, paid once; each
+    * — partition-local on the src-partitioned edge checkpoint, paid once; each
     * step is TWO |walks|-sized equi-joins (degree lookup, then (src,
     * idx) edge lookup) — never an explode over neighborhoods, so hub
     * nodes cost the same as leaves. Per-step state = |walks| rows. */

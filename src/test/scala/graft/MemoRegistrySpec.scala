@@ -2,7 +2,13 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Try
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.BloomMightContain
 import graft.api.Memo
 import graft.operators._
 import graft.sources.IoRoundtrip
@@ -11,8 +17,11 @@ import graft.sources.IoRoundtrip
   * dropped by SparkEntry.releaseMemos, so the next call pays the real
   * build again; `Memo.layout` entries live for the session, so a
   * release never rewrites an on-disk layout. Both are observed as
-  * Spark jobs, counted with a listener. */
+  * Spark jobs, counted with a listener. A release also destroys the
+  * broadcasts and drops the temp functions graft registered. */
 class MemoRegistrySpec extends SparkSpec {
+
+  private val MaxPagerankBuildJobs = 17
 
   /** Jobs started while `build` runs. A marker job after it fences the
     * count: listener events arrive in order, so once the marker's start
@@ -39,7 +48,9 @@ class MemoRegistrySpec extends SparkSpec {
   }
 
   // one memo producer from each module whose memos a release drops
+  // (the edge checkpoint first: pagerank's rebuild would rebuild it too)
   private val released: Seq[(String, () => Any)] = Seq(
+    "persistedSymEdges" -> (() => Graph.persistedSymEdges(spark, sf)),
     "Graph" -> (() => Graph.pagerank(spark, sf)),
     "Classify" -> (() => Classify.train(spark, sf)),
     "Similarity" -> (() => Similarity.mlKmeans(spark, sf)),
@@ -63,12 +74,60 @@ class MemoRegistrySpec extends SparkSpec {
 
   test("session-lived layouts run no write job after a release") {
     val layouts: Seq[(String, () => Any)] = Seq(
-      "persistedSymEdges" -> (() => Graph.persistedSymEdges(spark, sf)),
       "io_format_roundtrip" -> (() => IoRoundtrip.roundtrip(spark, sf)))
     layouts.foreach { case (_, build) => build() }
     SparkEntry.releaseMemos(spark)
     layouts.foreach { case (name, build) =>
       assert(jobsDuring(build()) == 0, s"$name rewrote its layout after a release")
     }
+  }
+
+  test("pagerank from a released state: no edge table, no cached frame, bounded jobs") {
+    SparkEntry.releaseMemos(spark)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(ql)
+    // the marker job of jobsDuring also fences the plans: both listeners
+    // read the same shared event queue
+    val jobs = try jobsDuring(Graph.pagerank(spark, sf))
+      finally spark.listenerManager.unregister(ql)
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_edges_b")))
+    assert(!plans.isEmpty)
+    plans.forEach(p => assert(!p.contains("InMemoryTableScan"), s"cached frame in\n$p"))
+    // measured on local[4] at sf0.001: 17 jobs; the bucketed edge
+    // table write and the cached node/base tables it replaced took 29
+    assert(jobs <= MaxPagerankBuildJobs, s"$jobs construction jobs")
+    SparkEntry.releaseMemos(spark)
+  }
+
+  test("releaseMemos drops the triangle Bloom probe's function and destroys its broadcast") {
+    def bloomFunctions: Int = spark.sessionState.functionRegistry.listFunction()
+      .count(_.funcName.startsWith("graft_tri_bloom_"))
+    // the probe's broadcasts, read off the plan (not off the registry)
+    def bloomBroadcasts(df: DataFrame): Seq[Broadcast[_]] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case b: BloomMightContain => b.bf
+      }))
+    def live(bcs: Seq[Broadcast[_]]): Int = bcs.count(b => Try(b.value).isSuccess)
+    SparkEntry.releaseMemos(spark)
+    val functionsBefore = bloomFunctions
+    spark.conf.set("spark.graft.triangleBloom", "true")
+    try {
+      val made = (1 to 2).flatMap { _ =>
+        val df = Graph.graphTriangles(spark, sf)
+        df.collect()
+        val bcs = bloomBroadcasts(df)
+        assert(bcs.nonEmpty && live(bcs) == bcs.size, "the forced Bloom probe never engaged")
+        assert(bloomFunctions > functionsBefore)
+        SparkEntry.releaseMemos(spark)
+        assert(bloomFunctions == functionsBefore)
+        bcs
+      }
+      assert(live(made) == 0, s"${live(made)} of ${made.size} Bloom broadcasts outlived a release")
+    } finally spark.conf.unset("spark.graft.triangleBloom")
   }
 }
