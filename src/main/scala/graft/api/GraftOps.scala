@@ -180,10 +180,11 @@ object GraftOps {
     * comparisons spread across `salt` reducers; buckets at or under the
     * threshold take the plain join. The candidate SET is identical to
     * [[minhashCandidates]] (each hot pair is found from its a-side
-    * salt, duplicates collapse in the existing distinct) —
-    * LshSweepSpec asserts the equality on a corpus with a planted hot
-    * bucket. The bucket-count pass is map-side combinable and rides
-    * the same (bj, bv) shuffle the join needs anyway. */
+    * salt; a pair sharing several bands is kept once by the MinHash
+    * route's distinct, see [[bucketPairs]]) — LshSweepSpec asserts the
+    * equality on a corpus with a planted hot bucket. The bucket-count
+    * pass is map-side combinable and rides the same (bj, bv) shuffle
+    * the join needs anyway. */
   def minhashCandidatesSalted(df: DataFrame, id: String, text: String, n: Int = 3,
                               bands: Int = Bands, rowsPerBand: Int = RowsPerBand,
                               hotThreshold: Long = 10000, salt: Int = 8): DataFrame = {
@@ -193,8 +194,8 @@ object GraftOps {
   }
 
   /** The ONE a<b pair core over a bucketed candidate table
-    * (id, bj, bv[, vec]) shared by the MinHash / SimHash / same-key /
-    * k-NN / embedding LSH tiers.
+    * (id, bj, bv[, vec][, prefix]) shared by the MinHash / SimHash /
+    * same-key / k-NN / embedding LSH tiers.
     *
     * Cold buckets (at or under `hotThreshold` rows; every bucket when
     * `hotThreshold` = Long.MaxValue) are grouped ONCE per (bj, bv) and
@@ -206,7 +207,24 @@ object GraftOps {
     * pair-sized moves as (a, b, cos). A `threshold` lets the kernel drop
     * pairs whose RAW cosine is below threshold − 1e-6 before any
     * BigDecimal rounding runs; the exact `round(cos, 6) >= threshold`
-    * filter and the cross-band distinct then run on the survivors.
+    * filter then runs on the survivors. With `buckets`, the number of
+    * distinct (bj, bv) keys the table can hold (tables × 2^bits for
+    * sign-bit LSH), the rows are spread over enough hash partitions
+    * that no task's `collect_list` groups reach ObjectHashAggregate's
+    * sort fallback, so the grouping holds no Tungsten page.
+    *
+    * Cross-table duplicates. A pair colliding in several tables meets
+    * in several buckets. With a `prefix` column — each row's buckets in
+    * tables 0 until bj, array<int> (the embedding and k-NN tiers) — a
+    * pair is emitted only at its FIRST colliding table: the kernel and
+    * the salted join both skip it when `bands_disjoint` finds an earlier
+    * table where the two prefixes agree, before any cosine. The output
+    * is then duplicate-free by construction and no aggregate over the
+    * pair columns runs. Without one, the pairs are deduplicated by a
+    * final `distinct`: the MinHash tiers (their persisted
+    * `graft_mh_cand_b*` band layout carries no band array) and the
+    * SimHash / same-key tiers (keyed by signature, not by a per-row band
+    * array) keep it.
     *
     * Hot buckets must never be collected into one row, so they keep the
     * salted sort-merge join: probe side keyed by md5(id) % salt, build
@@ -220,29 +238,42 @@ object GraftOps {
     *    Explain): no eager job, all buckets cold — the identical pair
     *    set on every corpus without a hot bucket;
     *  - otherwise one map-side-combined (bj, bv) count job, the probe.
-    * The pair SET is identical on every route (hot pairs are found from
-    * their a-side salt; cross-band duplicates collapse in the
-    * distinct). */
+    * The pair SET is identical on every route: hot pairs are found from
+    * their a-side salt, and each (bj, bv) bucket is wholly cold or
+    * wholly hot, so the first-table rule keeps one row per pair on a
+    * mixed route too. */
   private def bucketPairs(cand: DataFrame, id: String,
                           hotThreshold: Long, salt: Int,
                           vec: Option[String] = None,
                           threshold: Option[Double] = None,
-                          rowsPerTable: Option[Long] = None): DataFrame = {
+                          rowsPerTable: Option[Long] = None,
+                          prefix: Option[String] = None,
+                          buckets: Option[Long] = None): DataFrame = {
     graft.functions.VectorExpressions.register(cand.sparkSession)
     val floor = threshold.map(_ - graft.functions.BucketPairs.ScoreSlack)
-    def cold(rows: DataFrame) = rows
-      .filter(col("bv").isNotNull) // a null key never joined
+    // ObjectHashAggregate sorts (a page per sorter) once a task holds
+    // `fallbackThreshold` groups: aim each task at half that many
+    def spread(rows: DataFrame) = buckets.fold(rows) { k =>
+      val conf = rows.sparkSession.sessionState.conf
+      val perTask = math.max(1, conf.objectAggSortBasedFallbackThreshold / 2)
+      rows.repartition(math.max(conf.numShufflePartitions, ((k + perTask - 1) / perTask).toInt),
+        col("bj"), col("bv"))
+    }
+    def cold(rows: DataFrame) = spread(rows
+      .filter(col("bv").isNotNull)) // a null key never joined
       .groupBy("bj", "bv")
-      .agg(collect_list(struct(col(id) +: vec.map(col).toSeq: _*)).as("__m"))
+      .agg(collect_list(struct(col(id) +: (vec ++ prefix).map(col).toSeq: _*)).as("__m"))
       .select(call_function("bucket_pairs", col("__m") +: threshold.map(lit).toSeq: _*))
     def hot(rows: DataFrame) = {
       def side(as: String) = rows.select(col(id).as(as) +: col("bj") +: col("bv") +:
-        vec.map(v => col(v).as(s"${as}_v")).toSeq: _*)
+        (vec.map(v => col(v).as(s"${as}_v")) ++ prefix.map(p => col(p).as(s"${as}_p"))).toSeq: _*)
       val aSide = side("a").withColumn("__s",
         (conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
           .cast("long") % salt).cast("int"))
       val bSide = side("b").withColumn("__s", explode(array((0 until salt).map(lit): _*)))
-      val j = aSide.join(bSide, Seq("bj", "bv", "__s")).filter(col("a") < col("b"))
+      val firstBand = prefix.fold(lit(true))(_ => expr("bands_disjoint(a_p, b_p)"))
+      val j = aSide.join(bSide, Seq("bj", "bv", "__s"))
+        .filter(col("a") < col("b") && firstBand)
       vec match {
         case None => j.select("a", "b")
         case Some(_) =>
@@ -270,13 +301,20 @@ object GraftOps {
         cold(tagged.filter(isCold).drop("__n"))
           .unionAll(hot(tagged.filter(!isCold).drop("__n")))
       }
-    vec match {
-      case None => pairs.distinct()
+    val out = vec match {
+      case None => pairs
       case Some(_) =>
         val rounded = pairs.select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
-        threshold.fold(rounded)(t => rounded.filter(col("cos") >= t)).distinct()
+        threshold.fold(rounded)(t => rounded.filter(col("cos") >= t))
     }
+    if (prefix.isDefined) out else out.distinct()
   }
+
+  /** The per-row band prefix `bucketPairs` and `Similarity`'s ANN
+    * candidates use to keep a collision only at its first table: from
+    * an array of per-table buckets `b` and the row's table `bj`, the
+    * buckets of tables 0 until bj. */
+  private[graft] def bandPrefix(b: String): Column = expr(s"slice($b, 1, bj)")
 
   /** [[truncate]] that also returns the frame's row count, observed on
     * the checkpoint job itself (a `Dataset.observe` metric — no extra
@@ -335,18 +373,23 @@ object GraftOps {
     scoreMinhashPairs(sigs, pairs, id)
 
   /** DIRECTED candidate pairs from a bucketed candidate table
-    * (id, bj, bv) — the k-NN-graph form of the shared skew-safe
-    * enumerator: every same-bucket ordered pair (a→b, b→a), via the
-    * a<b enumeration symmetrized after the distinct (half the join
-    * work of enumerating ordered pairs directly; hot buckets spread
-    * with the same salted path). */
+    * (id, bj, bv[, prefix]) — the k-NN-graph form of the shared
+    * skew-safe enumerator: every same-bucket ordered pair (a→b, b→a),
+    * each a<b pair exploded to both directions in one projection (half
+    * the join work of enumerating ordered pairs directly, and no
+    * self-union, which would run the pair stage twice; hot buckets
+    * spread with the same salted path). With a `prefix` column
+    * ([[bandPrefix]]) each pair comes from its first colliding table and
+    * no distinct runs; without one, [[bucketPairs]]' distinct removes
+    * the cross-table repeats. */
   def bucketKnnPairs(cand: DataFrame, id: String,
                      hotThreshold: Long = Long.MaxValue,
-                     salt: Int = 1): DataFrame = {
-    val undirected = bucketPairs(cand, id, hotThreshold, salt)
-    undirected.unionAll(
-      undirected.select(col("b").as("a"), col("a").as("b")))
-  }
+                     salt: Int = 1,
+                     prefix: Option[String] = None): DataFrame =
+    bucketPairs(cand, id, hotThreshold, salt, prefix = prefix)
+      .select(explode(array(struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))).as("__e"))
+      .select("__e.a", "__e.b")
 
   /** Estimated Jaccard for candidate pairs from the full signatures. */
   private def scoreMinhashPairs(sigs: DataFrame, pairs: DataFrame,
@@ -491,13 +534,25 @@ object GraftOps {
     // LINEAR in tables × corpus × vector. The pair core scores every
     // pair inside its bucket, so everything pair-sized moves as
     // (a, b, cos). The checkpoint job also observes the corpus size:
-    // the rows per table, which bound every bucket.
+    // the rows per table, which bound every bucket. Each exploded row
+    // keeps only its buckets in the tables before its own (`__p`, half
+    // the bucket array on average): enough for the pair core to emit a
+    // pair at its first colliding table only, with no distinct.
     val buckets = (0 until tables).map(t => expr(s"lsh_bucket(v, $bits, $dims, $t)"))
     val (banded, rowsPerTable) = truncatedCounted(df
       .select(col(id), expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
       .select(col(id), col("v"), array(buckets: _*).as("__b")))
-    val cand = banded.select(col(id), col("v"), posexplode(col("__b")).as(Seq("bj", "bv")))
-    bucketPairs(cand, id, hotThreshold, salt, Some("v"), threshold, rowsPerTable)
+    val cand = banded
+      .select(col(id), col("v"), col("__b"), posexplode(col("__b")).as(Seq("bj", "bv")))
+      .select(col(id), col("v"), col("bj"), col("bv"), bandPrefix("__b").as("__p"))
+    // The kernel stage is the costliest of the route and ends in no
+    // shuffle of its own, so the pairs are shuffled on `a` once: a
+    // consumer that reads them twice then reads that shuffle (a global
+    // sort samples its input before sorting it; a symmetrized edge set
+    // is a self-union) instead of running every cosine again
+    bucketPairs(cand, id, hotThreshold, salt, Some("v"), threshold, rowsPerTable, Some("__p"),
+      buckets = Some(tables.toLong << bits))
+      .repartition(col("a"))
   }
 
   /** Winnowing document fingerprints (the MOSS sketch — Schleimer,

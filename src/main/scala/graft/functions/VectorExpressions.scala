@@ -52,13 +52,20 @@ object CosineSim {
 
 /** Per-bucket pair kernel of the LSH candidate stage
   * (`GraftOps.bucketPairs`): given ONE (bj, bv) bucket's members as
-  * `array<struct<id[, v]>>` (a `collect_list` over the bucket group),
-  * emits every member pair as (a, b) with a < b by the id type's
-  * Catalyst ordering, plus the raw `cos` when members carry an
-  * array<double> vector. This replaces the generic sort-merge bucket
+  * `array<struct<id[, v][, p]>>` (a `collect_list` over the bucket
+  * group), emits every member pair as (a, b) with a < b by the id
+  * type's Catalyst ordering, plus the raw `cos` when members carry an
+  * array<double> vector `v`. This replaces the generic sort-merge bucket
   * self-join: no ordered in-bucket row stream, no join-side copies,
   * and the cosine runs [[CosineSim.cosine]] (bit-identical to
   * `cosine_sim`) straight over the bucket's vectors.
+  *
+  * Members that carry an array<int> band prefix `p` (their buckets in
+  * tables 0 until bj) make the output duplicate-free across tables: a
+  * pair is emitted only in the bucket of its FIRST colliding table, so
+  * it is skipped when [[BandsDisjoint.disjoint]] finds an earlier table
+  * where the two prefixes agree. The check runs before the cosine, so a
+  * repeat collision never pays for one.
   *
   * With a `threshold`, pairs whose raw cosine lies below
   * `threshold - ScoreSlack` are dropped before they leave the kernel:
@@ -81,7 +88,14 @@ case class BucketPairs(child: Expression, threshold: Option[Double])
   private def member: StructType =
     child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
   private def idType: DataType = member.head.dataType
-  private def scored: Boolean = member.length > 1
+  // the optional member fields, told apart by type: vector, band prefix
+  private def fieldOf(t: DataType): Int = member.fields.indexWhere {
+    case StructField(_, ArrayType(e, _), _, _) => e == t
+    case _ => false
+  }
+  private def vecAt: Int = fieldOf(DoubleType)
+  private def prefixAt: Int = fieldOf(IntegerType)
+  private def scored: Boolean = vecAt > 0
 
   override def prettyName: String = "bucket_pairs"
 
@@ -103,19 +117,23 @@ case class BucketPairs(child: Expression, threshold: Option[Double])
 
   def pairs(m: ArrayData): Iterator[InternalRow] = {
     val width = member.length
+    val vi = vecAt
+    val pi = prefixAt
     val n = m.numElements()
     val ids = new Array[Any](n)
     val vs = new Array[ArrayData](n)
+    val ps = new Array[ArrayData](n)
     var k = 0
     var i = 0
     while (i < n) {
       if (!m.isNullAt(i)) {
         val r = m.getStruct(i, width)
         val keep = !r.isNullAt(0) &&
-          !(scored && threshold.isDefined && r.isNullAt(1))
+          !(scored && threshold.isDefined && r.isNullAt(vi))
         if (keep) {
           ids(k) = r.get(0, idType)
-          if (scored && !r.isNullAt(1)) vs(k) = r.getArray(1)
+          if (scored && !r.isNullAt(vi)) vs(k) = r.getArray(vi)
+          if (pi > 0 && !r.isNullAt(pi)) ps(k) = r.getArray(pi)
           k += 1
         }
       }
@@ -134,7 +152,7 @@ case class BucketPairs(child: Expression, threshold: Option[Double])
           if (y >= live) { x += 1; y = x }
           else {
             val c = idOrdering.compare(ids(x), ids(y))
-            if (c != 0) {
+            if (c != 0 && (ps(x) == null || BandsDisjoint.disjoint(ps(x), ps(y)))) {
               val (a, b) = if (c < 0) (ids(x), ids(y)) else (ids(y), ids(x))
               if (!scored) return InternalRow(a, b)
               val va = vs(x); val vb = vs(y)
@@ -176,6 +194,77 @@ object BucketPairs {
     * shift `round(c, 6)` can apply, so the filter never drops a pair
     * the exact rounded filter would keep. */
   val ScoreSlack = 1e-6
+}
+
+/** First-collision predicate of the LSH pair and candidate stages:
+  * `bands_disjoint(x, y)` is true when the band prefixes `x` and `y`
+  * agree in no table. `x` (array<int>) holds one side's buckets in
+  * tables 0 until bj; `y` holds the other side's, either as array<int>
+  * (one bucket per table) or as array<array<int>> (a query's multiprobe
+  * set per table, matching when it holds x's bucket). A row of a
+  * (bj, bv) bucket join that passes collides first at table bj, so each
+  * pair or (query, candidate) survives exactly once, whatever number
+  * of tables it collides in — the join needs no `distinct`. Null
+  * elements never match. */
+case class BandsDisjoint(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "bands_disjoint"
+
+  private def probed: Boolean = right.dataType match {
+    case ArrayType(ArrayType(_, _), _) => true
+    case _ => false
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (probed) BandsDisjoint.unprobed(x, y) else BandsDisjoint.disjoint(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = if (probed) "unprobed" else "disjoint"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.BandsDisjoint$$.MODULE$$.$f($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BandsDisjoint =
+    copy(left = l, right = r)
+}
+
+object BandsDisjoint {
+  /** No index of the common prefix where `x` and `y` hold the same
+    * non-null bucket. */
+  def disjoint(x: ArrayData, y: ArrayData): Boolean = {
+    val n = math.min(x.numElements(), y.numElements())
+    var k = 0
+    while (k < n) {
+      if (!x.isNullAt(k) && !y.isNullAt(k) && x.getInt(k) == y.getInt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  /** No index of the common prefix whose probe set `probes(k)` holds
+    * the bucket `x(k)`. */
+  def unprobed(x: ArrayData, probes: ArrayData): Boolean = {
+    val n = math.min(x.numElements(), probes.numElements())
+    var k = 0
+    while (k < n) {
+      if (!x.isNullAt(k) && !probes.isNullAt(k)) {
+        val b = x.getInt(k)
+        val ps = probes.getArray(k)
+        var j = 0
+        while (j < ps.numElements()) {
+          if (!ps.isNullAt(j) && ps.getInt(j) == b) return false
+          j += 1
+        }
+      }
+      k += 1
+    }
+    true
+  }
 }
 
 /** Native dot product over array<double> — CosineSim minus the
@@ -476,6 +565,9 @@ object VectorExpressions {
     BucketPairs(exprs.head, threshold)
   }
 
+  private[graft] def bandsDisjointBuilder(exprs: Seq[Expression]): Expression =
+    BandsDisjoint(exprs.head, exprs(1))
+
   /** Every native function graft registers: (SQL name, builder,
     * expression class). [[register]] and `graft.GraftExtensions` both
     * walk this one list, so a function cannot be registered in one
@@ -491,7 +583,8 @@ object VectorExpressions {
     ("vint_pack", vintPackBuilder, classOf[VIntPack]),
     ("vint_unpack", vintUnpackBuilder, classOf[VIntUnpack]),
     ("common_prefix_length", commonPrefixBuilder, classOf[CommonPrefixLength]),
-    ("bucket_pairs", bucketPairsBuilder, classOf[BucketPairs]))
+    ("bucket_pairs", bucketPairsBuilder, classOf[BucketPairs]),
+    ("bands_disjoint", bandsDisjointBuilder, classOf[BandsDisjoint]))
 
   /** Idempotently register graft's native functions on a session so
     * plans can reference them via `expr("cosine_sim(a, b)")` / SQL. */

@@ -349,11 +349,14 @@ object Graph {
     * each degree. Scan + two groupBys (map-side partial both times);
     * shuffle volume ∝ |V| then ∝ distinct degrees. */
   def graphDegree(spark: SparkSession, dir: String): DataFrame =
-    // degrees are already fused into the edge checkpoint: one distinct
-    // over (src, d) — shuffle ∝ |V| — then the tiny distribution groupBy,
-    // instead of re-counting over the |E| edge rows
+    // on the symmetric edge set a node's edge count per dst is its
+    // degree. Counting per dst shuffles between the partial and the
+    // final aggregation; a distinct over src, the column the checkpoint
+    // is partitioned on, would run both phases in one task, each holding
+    // a full Tungsten page however few rows it has. Then the tiny
+    // distribution groupBy
     persistedSymEdges(spark, dir)
-      .select(col("src"), col("d").as("degree")).distinct()
+      .groupBy(col("dst")).agg(count(lit(1)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
       .orderBy("degree")
 

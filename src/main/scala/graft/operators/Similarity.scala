@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.api.Memo
@@ -45,32 +45,41 @@ object Similarity {
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
   }
 
-  /** The [[NumTables]] sign-bit buckets of a vector column, as one
-    * array (element t = table t). */
-  private def tableBuckets(v: String, dims: Int = 64): Column =
-    array((0 until NumTables).map(t => expr(s"lsh_bucket($v, $BitsPerTable, $dims, $t)")): _*)
+  /** The corpus side of the LSH tiers: ONE scan of `(vec_id, <v>)`,
+    * its [[NumTables]] sign-bit buckets exploded to one
+    * (vec_id, bj, bv, __p) row per table, `__p` being the row's buckets
+    * in the tables before bj ([[graft.api.GraftOps.bandPrefix]]). */
+  private[operators] def corpusBuckets(e0: DataFrame, v: String = "v",
+                                       dims: Int = 64): DataFrame =
+    e0.select(col("vec_id"), array((0 until NumTables).map(t =>
+        expr(s"lsh_bucket($v, $BitsPerTable, $dims, $t)")): _*).as("__b"))
+      .select(col("vec_id"), col("__b"), posexplode(col("__b")).as(Seq("bj", "bv")))
+      .select(col("vec_id"), col("bj"), col("bv"),
+        graft.api.GraftOps.bandPrefix("__b").as("__p"))
 
-  /** The corpus side of the ANN tiers: ONE scan, exploded to one
-    * (vec_id, bj, bv) row per table. */
-  private def corpusBuckets(e0: DataFrame): DataFrame =
-    e0.select(col("vec_id"), posexplode(tableBuckets("v")).as(Seq("bj", "bv")))
-
-  /** The query side of the multiprobe tiers: per (qid, table) the base
-    * bucket plus `nprobe` flipped buckets (`lsh_probes`), one
-    * (qid, bj, bv) row each, from ONE projection of `(qid, v)`. */
+  /** The query side of the ANN tiers: per (qid, table) the base bucket
+    * plus `nprobe` flipped buckets (`lsh_probes`; nprobe = 0 is the base
+    * bucket alone), one (qid, bj, bv, __q) row each, from ONE projection
+    * of `(qid, v)`. `__q` holds the query's probe sets of the tables
+    * before bj. */
   private def probeRows(q: DataFrame, dims: Int, nprobe: Int): DataFrame =
-    q.select(col("qid"), posexplode(array((0 until NumTables).map(t =>
-        expr(s"lsh_probes(v, $BitsPerTable, $dims, $t, $nprobe)")): _*)).as(Seq("bj", "probes")))
-      .select(col("qid"), col("bj"), explode(col("probes")).as("bv"))
+    q.select(col("qid"), array((0 until NumTables).map(t =>
+        expr(s"lsh_probes(v, $BitsPerTable, $dims, $t, $nprobe)")): _*).as("__ps"))
+      .select(col("qid"), col("__ps"), posexplode(col("__ps")).as(Seq("bj", "probes")))
+      .select(col("qid"), col("bj"), explode(col("probes")).as("bv"),
+        graft.api.GraftOps.bandPrefix("__ps").as("__q"))
 
-  /** Distinct (qid, vec_id) candidates colliding in any table: one
-    * equi-join of the corpus buckets against the broadcast query
-    * buckets on (bj, bv), whatever the table count. */
+  /** (qid, vec_id) candidates colliding in any table: one equi-join of
+    * the corpus buckets against the broadcast query probes on (bj, bv),
+    * whatever the table count. A row is kept only at the pair's FIRST
+    * matching table (`bands_disjoint`: no earlier table whose probe set
+    * holds the corpus bucket), so each candidate appears once with no
+    * distinct: a query's probe set of one table holds distinct buckets,
+    * so one corpus row meets at most one probe row per table. */
   private def candidateIds(corpus: DataFrame, queries: DataFrame): DataFrame =
     corpus.join(broadcast(queries), Seq("bj", "bv"))
-      .filter(col("vec_id") =!= col("qid"))
+      .filter(col("vec_id") =!= col("qid") && expr("bands_disjoint(__p, __q)"))
       .select(col("qid"), col("vec_id"))
-      .distinct()
 
   /** Exact cosine top-k for the first NumQueries vector ids. */
   def cosineTopk(spark: SparkSession, dir: String): DataFrame = {
@@ -143,11 +152,9 @@ object Similarity {
     val qAug = e0.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         expr("concat(v, array(CAST(0.0 AS DOUBLE)))").as("aqv"))
-    val eb = itemsAug.select(col("vec_id"),
-      posexplode(tableBuckets("av", MipsAugDim)).as(Seq("bj", "bv")))
     val qp = probeRows(qAug.select(col("qid"), col("aqv").as("v")),
       MipsAugDim, MultiProbeWide)
-    val ids = candidateIds(eb, qp)
+    val ids = candidateIds(corpusBuckets(itemsAug, "av", MipsAugDim), qp)
     val scored = ids
       .join(broadcast(qAug.select(col("qid"), col("qv"))), Seq("qid"))
       .join(items, Seq("vec_id"))
@@ -345,28 +352,11 @@ object Similarity {
   /** ANN via multi-table LSH: candidates collide with the query in ANY
     * of the NumTables sign-bit buckets (native `lsh_bucket` expression,
     * one seed per table), then exact cosine + top-k over the candidate
-    * union. Shuffle volume ∝ tables × docs, never docs². */
-  def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = emb(spark, dir)
-    val q = e0.filter(col("vec_id") < NumQueries)
-    // candidates across all tables: dedup on the bare id pair (the
-    // vectors are functionally determined by the ids — carrying them
-    // through the distinct would shuffle ~64 doubles per row per table),
-    // then join the vectors back once
-    val ids = candidateIds(corpusBuckets(e0),
-      q.select(col("vec_id").as("qid"), posexplode(tableBuckets("v")).as(Seq("bj", "bv"))))
-    // final ranking through the bounded-heap aggregate: ≤ k rows per
-    // query leave each scan task (row_number-over-qid would sort the
-    // whole candidate set on |Q| tasks)
-    val scored = ids
-      .join(broadcast(q.select(col("vec_id").as("qid"), col("v").as("qv"))), Seq("qid"))
-      .join(e0, Seq("vec_id"))
-      .select(col("qid"), expr("cosine_sim(qv, v)").as("cos"), col("vec_id"))
-    graft.api.GraftOps.topKPerGroupAgg(scored, part = "qid",
-        ordCol = "cos", payloadCol = "vec_id", k = TopK)
-      .select(col("qid"), col("rnk"), col("vec_id").as("neighbor"), round(col("cos"), 6).as("cos"))
-      .orderBy("qid", "rnk")
-  }
+    * union. Shuffle volume ∝ tables × docs, never docs². It is the
+    * multiprobe tier with no flipped probes: `lsh_probes` at nprobe = 0
+    * is the `lsh_bucket` base bucket. */
+  def annLsh(spark: SparkSession, dir: String): DataFrame =
+    annLshMultiprobeOf(0)(spark, dir)
 
   /** Multiprobe LSH ANN (Lv et al., VLDB'07): [[annLsh]]'s tables and
     * corpus hashing unchanged, but each QUERY additionally probes, per
@@ -397,6 +387,11 @@ object Similarity {
   private def annLshMultiprobeOf(nprobe: Int)(spark: SparkSession, dir: String): DataFrame = {
     val e0 = emb(spark, dir)
     val q0 = e0.filter(col("vec_id") < NumQueries)
+    // candidates as bare id pairs (the vectors are functionally
+    // determined by the ids), the vectors joined back once; the final
+    // ranking runs through the bounded-heap aggregate: ≤ k rows per
+    // query leave each scan task (row_number-over-qid would sort the
+    // whole candidate set on |Q| tasks)
     val ids = candidateIds(corpusBuckets(e0),
       probeRows(q0.select(col("vec_id").as("qid"), col("v")), 64, nprobe))
     val scored = ids
@@ -467,7 +462,8 @@ object Similarity {
   val KnnK = 3
   def simKnnGraph(spark: SparkSession, dir: String): DataFrame = {
     val e0 = emb(spark, dir)
-    val pairs = graft.api.GraftOps.bucketKnnPairs(corpusBuckets(e0), "vec_id")
+    val pairs = graft.api.GraftOps.bucketKnnPairs(corpusBuckets(e0), "vec_id",
+      prefix = Some("__p"))
     val scored = pairs
       .join(e0.select(col("vec_id").as("a"), col("v").as("qv")), Seq("a"))
       .join(e0.select(col("vec_id").as("b"), col("v")), Seq("b"))

@@ -45,11 +45,8 @@ object Truss {
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .memoized()
-    val buckets = (0 until Similarity.NumTables).map(t =>
-      expr(s"lsh_bucket(v, ${Similarity.BitsPerTable}, 64, $t)"))
-    val cand = e0.select(col("vec_id"),
-      posexplode(array(buckets: _*)).as(Seq("bj", "bv")))
-    val pairs = graft.api.GraftOps.bucketKnnPairs(cand, "vec_id")
+    val pairs = graft.api.GraftOps.bucketKnnPairs(Similarity.corpusBuckets(e0), "vec_id",
+      prefix = Some("__p"))
     val scored = pairs
       .join(e0.select(col("vec_id").as("a"), col("v").as("qv")), Seq("a"))
       .join(e0.select(col("vec_id").as("b"), col("v")), Seq("b"))

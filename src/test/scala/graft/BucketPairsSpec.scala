@@ -9,9 +9,10 @@ import graft.api.GraftOps
 
 /** The LSH pair core (GraftOps.bucketPairs): the `bucket_pairs` kernel's
   * raw-score pre-filter never changes the rounded-threshold answer, the
-  * unfiltered candidate stage equals the plain (bj, bv) self-join, the
-  * hot-bucket probe is skipped when no bucket can be hot, and banding
-  * scans the corpus once whatever the table count. */
+  * unfiltered candidate stage equals the plain (bj, bv) self-join, a
+  * pair colliding in several tables is emitted once without a distinct,
+  * the hot-bucket probe is skipped when no bucket can be hot, and
+  * banding scans the corpus once whatever the table count. */
 class BucketPairsSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
@@ -86,6 +87,39 @@ class BucketPairsSpec extends SparkSpec {
     // 500 vectors over 16 buckets per table: a threshold of 30 rows
     // splits the buckets between the kernel and the salted join
     assert(cand(30L) == ref)
+  }
+
+  test("pairs colliding in several tables come out once, cold and hot, with no pair aggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // 0 bits: every vector shares the one bucket of each of 3 tables, so
+    // every pair collides in all of them
+    val df = fan(Seq(0.1, 0.5, 0.9, 0.99))
+    val all = (0L to 4L).combinations(2).map(p => (p(0), p(1))).toSet
+    val emb = sources.Tables.embeddings(spark, sf001)
+    def once(pairs: DataFrame, expected: Set[(Long, Long)]): Unit = {
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val repeated = got.groupBy(identity).collect { case (p, ps) if ps.size > 1 => p }
+      assert(repeated.isEmpty, s"pairs emitted more than once: ${repeated.take(5)}")
+      assert(got.toSet == expected)
+      // the executed plan carries no aggregate keyed on a or b: the
+      // uniqueness comes from the pair core, not from a distinct
+      val keys = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+        case agg: BaseAggregateExec => agg.groupingExpressions.flatMap(_.references.map(_.name))
+      }.flatten
+      assert(!keys.exists(k => k == "a" || k == "b"), s"aggregate keys: $keys")
+    }
+    // emb at 2 bits: 4 buckets per table, so most pairs meet in several
+    // of the 4 tables; a hot threshold of 30 rows splits the buckets
+    // between the kernel and the salted join
+    val ref = pairSet(referencePairs(emb, tables = 4, bits = 2, dims = 64))
+      .map(p => (p._1, p._2))
+    for (hot <- Seq(Long.MaxValue, 1L)) once(GraftOps.embeddingNearDupPairs(df, "vec_id",
+      "embedding", threshold = -1.0, tables = 3, bits = 0, dims = 2, hotThreshold = hot,
+      salt = 2), all)
+    for (hot <- Seq(Long.MaxValue, 30L)) once(GraftOps.embeddingCandidatePairs(emb, "vec_id",
+      "embedding", tables = 4, bits = 2, dims = 64, hotThreshold = hot, salt = 4), ref)
+    SparkEntry.releaseMemos(spark)
   }
 
   /** Jobs started while `build` runs. A marker job before and after

@@ -45,13 +45,40 @@ class GraphScaleSpec extends SparkSpec {
   }
 
   test("pagerank plan carries no forced broadcast hint") {
-    // a ResolvedHint in the analyzed plan = a hard-coded broadcast() call
-    // that would bypass the size threshold at any scale
+    // Graph.pagerank returns a memoized checkpoint, so its own plan hides
+    // the iteration: listen to every plan executed while it builds from
+    // a released state instead. A ResolvedHint in an analyzed plan = a
+    // hard-coded broadcast() call that would bypass the size threshold
+    // at any scale; with broadcasting disabled, any broadcast exchange
+    // in an executed plan can only come from such a hint.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add((qe.analyzed.toString, qe.executedPlan.toString))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     SparkEntry.releaseMemos(spark)
-    val analyzed = Graph.pagerank(spark, sf).queryExecution.analyzed.toString
+    spark.listenerManager.register(ql)
+    try withBroadcastDisabled {
+      Graph.pagerank(spark, sf).collect()
+      // listener events are delivered in order: once this marker
+      // query's event arrives, every pagerank plan's has too
+      spark.range(1).toDF("graph_scale_spec_marker").collect()
+      def marked = plans.toArray.exists(_.toString.contains("graph_scale_spec_marker"))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked, "marker query's plan never delivered")
+    } finally spark.listenerManager.unregister(ql)
     SparkEntry.releaseMemos(spark)
-    assert(!analyzed.contains("UnresolvedHint") && !analyzed.contains("ResolvedHint"),
-      s"forced hint in pagerank plan:\n${analyzed.take(1500)}")
+    assert(plans.size > 2, s"${plans.size} executed plans seen")
+    plans.forEach { case (analyzed, executed) =>
+      assert(!analyzed.contains("UnresolvedHint") && !analyzed.contains("ResolvedHint"),
+        s"forced hint in a pagerank plan:\n${analyzed.take(1500)}")
+      assert(!executed.contains("BroadcastExchange"),
+        s"broadcast in a pagerank plan with broadcasting disabled:\n${executed.take(1500)}")
+    }
   }
 
   test("DOULION-sampled triangle estimate lands within 10% of exact (sf0.01)") {
