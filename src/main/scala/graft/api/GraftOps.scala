@@ -322,10 +322,14 @@ object GraftOps {
   private def truncatedCounted(df: DataFrame): (DataFrame, Option[Long]) = {
     val obs = org.apache.spark.sql.Observation()
     val t = truncate(df.observe(obs, count(lit(1)).as("n")))
-    val n = scala.util.Try(scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(30, "s")).getLong(0)).toOption
-    (t, n)
+    (t, observed(obs).map(_.getLong(0)))
   }
+
+  /** The metrics of `obs`, once the job that ran it has reported; None
+    * if they did not arrive. */
+  private def observed(obs: org.apache.spark.sql.Observation): Option[org.apache.spark.sql.Row] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(30, "s"))).toOption
 
   /** Shared signature + banding front-end of the MinHash tiers: one
     * checkpointed signature row per doc (consumed by banding and the
@@ -1044,30 +1048,128 @@ object GraftOps {
       .select(col("v"), coalesce(col("__cc"), col("comp")).as("comp"))
   }
 
-  /** Personalized PageRank over an ARBITRARY directed edge list, with
-    * dangling-mass redistribution (reference semantics:
+  /** A src-keyed edge checkpoint (src, dst[, w], d[, s]) that reports
+    * its hash partitioning on src; `closed`: no node dangles and every
+    * node receives a message each PageRank round. */
+  private[graft] final case class KeyedEdges(df: DataFrame, closed: Boolean)
+
+  /** Key `edges` (src, dst[, w]) on src: repartition into the session's
+    * shuffle-partition count (explicit, so AQE cannot coalesce it), fuse
+    * the src's out-degree `d` (and out-strength `s` = Σw) from a window
+    * over that partitioning (no extra shuffle), [[truncate]] (both
+    * checkpoint modes, Memo-registered) and report
+    * `HashPartitioning(src, n)`. The same job observes whether the graph
+    * is closed: src and dst hold the same multiset (compared by sums of
+    * each 32-bit half of xxhash64, exact whatever the row order) and
+    * every one of `nodes` has an out-edge. */
+  private[graft] def keyedEdges(edges: DataFrame, nodes: Seq[Long] = Nil): KeyedEdges = {
+    val n = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val bySrc = Window.partitionBy("src")
+    val fused = count(lit(1)).over(bySrc).as("d") +:
+      (if (edges.columns.contains("w")) Seq(sum(col("w")).over(bySrc).as("s")) else Nil)
+    def halves(c: String): Seq[Column] = Seq(
+      sum(xxhash64(col(c)).bitwiseAND(0xFFFFFFFFL)).as(s"${c}_lo"),
+      sum(shiftrightunsigned(xxhash64(col(c)), 32)).as(s"${c}_hi"))
+    val present = nodes.zipWithIndex.map { case (v, i) =>
+      max(when(col("src") === v, lit(1))).as(s"node$i") }
+    val obs = org.apache.spark.sql.Observation()
+    val metrics = halves("src") ++ halves("dst") ++ present
+    val ckpt = edges.repartition(n, col("src")).select(col("*") +: fused: _*)
+      .observe(obs, metrics.head, metrics.tail: _*)
+      .truncated()
+    val closed = observed(obs).exists(m => m.get(0) == m.get(2) && m.get(1) == m.get(3) &&
+      (4 until m.length).forall(i => m.get(i) == 1))
+    KeyedEdges(org.apache.spark.sql.graft.KeyedCheckpoint.hashPartitioned(ckpt, Seq("src"), n),
+      closed)
+  }
+
+  /** Node table of keyed edges plus `sources`: (v, p, dang), p the jump
+    * share, dang for a node without out-edges. */
+  private def rankNodes(edges: DataFrame, sources: Seq[Long]): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(col("src").as("v"), lit(false).as("dang"))
+      .unionAll(edges.select(col("dst").as("v"), lit(true).as("dang")))
+      .unionAll(sources.toDF("v").select(col("v"), lit(true).as("dang")))
+      .groupBy("v").agg(min(col("dang")).as("dang"))
+      .select(col("v"), when(col("v").isin(sources: _*), lit(1.0 / sources.length))
+        .otherwise(lit(0.0)).as("p"), col("dang"))
+      .truncated()
+  }
+
+  /** The one PageRank core (reference semantics:
     * a4/RunPersonalizedPageRankBasic.java — α jump mass returns only to
-    * the source nodes, split evenly; mass lost at dangling nodes — no
-    * out-edges — is redistributed the same way, so Σr = 1 holds exactly
-    * every round; PageRankDanglingSpec asserts it on a graph where
-    * every non-source node is dangling).
+    * the source nodes, split evenly; mass lost at dangling nodes, those
+    * without out-edges, is redistributed the same way, so Σr = 1 holds
+    * every round):
     *
     *   r₀(v)   = p(v)                         p = 1/|sources| on sources
-    *   rₖ₊₁(v) = α·p(v) + (1-α)·(Σ_{u→v} rₖ(u)/d(u) + mₖ·p(v))
+    *   rₖ₊₁(v) = (1-α)·(Σ_{u→v} msg(rₖ(u)) + mₖ·p(v)) + α·p(v)
     *   mₖ      = Σ_{dangling u} rₖ(u)
     *
-    * Scale: edges are repartitioned on src ONCE and cached, so each
-    * iteration shuffles only the |V|-sized rank table plus one scalar
-    * (the dangling mass — an agg, broadcast as a 1-row cross join). No
-    * forced broadcasts of |V|/|E| tables; AQE decides. */
+    * `msg` is the per-edge message over the src rank `r` and the fused
+    * edge columns (`r / d`, `r / s * w`). Each round is ONE aggregation
+    * on v over the messages ∪ one jump row per node carrying p and the
+    * round's m, in the oracles' float order; only the |V| rank table
+    * shuffles, and AQE (no hint) broadcasts it while it fits. A closed
+    * graph skips the dangling term and the node table: the jump rows
+    * are the sources, and round 1 reads r₀ off each edge's src. `init`
+    * (v, r) warm-starts; nodes it lacks start at 0. Returns (v, r). */
+  private[graft] def pageRank(edges: KeyedEdges, msg: Column, sources: Seq[Long],
+                              alpha: Double, iters: Int,
+                              init: Option[DataFrame] = None): DataFrame = {
+    require(sources.nonEmpty, "personalized PageRank needs at least one source node")
+    val spark = edges.df.sparkSession
+    import spark.implicits._
+    val e = edges.df
+    val open = !edges.closed || init.isDefined || iters == 0
+    val nul = lit(null).cast("double")
+    val jumps =
+      if (open) rankNodes(e, sources)
+      else sources.toDF("v").select(col("v"), lit(1.0 / sources.length).as("p"))
+    val flag = if (open) Seq(col("dang")) else Nil
+    def round(messages: DataFrame, m: Option[DataFrame]): DataFrame = {
+      val jumpRows = m.fold(jumps.select(col("v"), nul.as("c"), col("p")))(
+        mm => jumps.crossJoin(broadcast(mm)).select(col("v"), nul.as("c"), col("p"), col("dang"), col("m")))
+      val dm = if (open) coalesce(max(col("m")) * max(col("p")), lit(0.0)) else lit(0.0)
+      messages.select(col("v") +: col("c") +: nul.as("p") +:
+          (if (open) Seq(lit(null).cast("boolean").as("dang"), nul.as("m")) else Nil): _*)
+        .unionAll(jumpRows)
+        .groupBy("v")
+        .agg((lit(1 - alpha) * (coalesce(sum(col("c")), lit(0.0)) + dm) +
+          lit(alpha) * coalesce(max(col("p")), lit(0.0))).as("r"),
+          (if (open) Seq(max(col("dang")).as("dang")) else Nil): _*)
+    }
+    // m summed exactly in DECIMAL (Σr ≤ 1): independent of row order, so
+    // a warm start continues the cold iteration bit for bit
+    def dangling(ranks: DataFrame): Option[DataFrame] =
+      if (open) Some(ranks.filter(col("dang"))
+        .agg(coalesce(sum(col("r").cast("decimal(38,30)")).cast("double"), lit(0.0)).as("m")))
+      else None
+    var ranks = init.fold(jumps.select(col("v") +: col("p").as("r") +: flag: _*))(i =>
+      jumps.join(i.select(col("v"), col("r")), Seq("v"), "left")
+        .select(col("v") +: coalesce(col("r"), lit(0.0)).as("r") +: flag: _*))
+    for (k <- 1 to iters) {
+      val messages =
+        if (k == 1 && init.isEmpty)
+          e.withColumn("r", when(col("src").isin(sources: _*), lit(1.0 / sources.length))
+            .otherwise(lit(0.0)))
+        else e.join(ranks, e("src") === ranks("v"))
+      ranks = round(messages.select(col("dst").as("v"), msg.as("c")), dangling(ranks))
+      // an open round reads the previous ranks twice: bound the plan
+      if (open && k % 3 == 0 && k < iters) ranks = ranks.truncated()
+    }
+    ranks.select(col("v"), col("r"))
+  }
+
+  /** Personalized PageRank over an ARBITRARY directed edge list on the
+    * [[pageRank]] core (PageRankDanglingSpec: Σr = 1 when most nodes
+    * dangle). */
   def personalizedPageRank(edges0: DataFrame, srcCol: String, dstCol: String,
                            sources: Seq[Long], alpha: Double = 0.15,
-                           iters: Int = 5,
-                           prePartitioned: Boolean = false): DataFrame = {
-    val (edges, deg, base) = prGraph(edges0, srcCol, dstCol, sources, prePartitioned)
-    prLoop(edges, deg, base, base.select(col("v"), col("jump0").as("r")),
-      alpha, iters)
-  }
+                           iters: Int = 5): DataFrame =
+    pageRank(keyedEdges(edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")), sources),
+      col("r") / col("d"), sources, alpha, iters)
 
   /** Warm-start variant of [[personalizedPageRank]]: iterate on
     * `edges0` starting from an EXISTING rank table `init` (v, r)
@@ -1079,109 +1181,22 @@ object GraftOps {
     * 5+ cold-start rounds over the full graph. */
   def personalizedPageRankFrom(edges0: DataFrame, srcCol: String, dstCol: String,
                                sources: Seq[Long], init: DataFrame,
-                               alpha: Double = 0.15, iters: Int = 2): DataFrame = {
-    val (edges, deg, base) = prGraph(edges0, srcCol, dstCol, sources)
-    val warm = base.join(init.select(col("v"), col("r")), Seq("v"), "left")
-      .select(col("v"), coalesce(col("r"), lit(0.0)).as("r"))
-    prLoop(edges, deg, base, warm, alpha, iters)
-  }
-
-  /** Shared graph prep: src-partitioned edges, out-degrees, and the
-    * node×jump base table. `prePartitioned = true` declares the input
-    * already hash-partitioned on `srcCol` (a checkpoint such as
-    * `Graph.persistedSymEdges`): the explicit repartition AND the edge
-    * cache are skipped — the checkpoint reports the partitioning and
-    * every downstream src-keyed join/agg rides it with zero Exchange. */
-  private def prGraph(edges0: DataFrame, srcCol: String, dstCol: String,
-                      sources: Seq[Long],
-                      prePartitioned: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
-    require(sources.nonEmpty, "personalized PageRank needs at least one source node")
-    val spark = edges0.sparkSession
-    import spark.implicits._
-    val sel = edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val edges = if (prePartitioned) sel else sel.repartition(col("src"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d")).memoCached()
-    // degree fused into the edge table at build time: each iteration
-    // then joins ranks ONCE against it — the former per-round
-    // ranks⋈deg stage is gone, and r/d per edge row uses the identical
-    // operands (r, d are per-src), so the float path is unchanged.
-    // Co-partitioned on src either way.
-    val edgesD = {
-      val j = edges.join(deg, "src")
-      if (prePartitioned) j else j.memoCached()
-    }
-    val srcDf = sources.toDF("v").withColumn("jump0", lit(1.0 / sources.length))
-    val nodes = edgesD.select(col("src").as("v"))
-      .unionAll(edgesD.select(col("dst").as("v")))
-      .unionAll(srcDf.select(col("v"))).distinct()
-    val base = nodes.join(srcDf, Seq("v"), "left")
-      .select(col("v"), coalesce(col("jump0"), lit(0.0)).as("jump0")).memoCached()
-    (edgesD, deg, base)
-  }
-
-  /** The PageRank power iteration shared by cold and warm starts;
-    * `edges` carries the fused per-src out-degree column `d`. */
-  private def prLoop(edges: DataFrame, deg: DataFrame, base: DataFrame,
-                     init: DataFrame, alpha: Double, iters: Int): DataFrame = {
-    var ranks = init
-    for (i <- 1 to iters) {
-      val contrib = edges.join(ranks, edges("src") === ranks("v"))
-        .groupBy(col("dst").as("v")).agg(sum(col("r") / col("d")).as("c"))
-      val dangling = ranks.join(deg, ranks("v") === deg("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0.0)).as("m"))
-      ranks = base.join(contrib, Seq("v"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("v"),
-          (lit(1 - alpha) * (coalesce(col("c"), lit(0.0)) + col("m") * col("jump0")) +
-           lit(alpha) * col("jump0")).as("r"))
-      if (i % 3 == 0) ranks = ranks.truncated()
-    }
-    ranks
-  }
+                               alpha: Double = 0.15, iters: Int = 2): DataFrame =
+    pageRank(keyedEdges(edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")), sources),
+      col("r") / col("d"), sources, alpha, iters, Some(init))
 
   /** Weighted variant of [[personalizedPageRank]]: each edge carries a
     * weight column; a node's rank flows out PROPORTIONALLY to edge
-    * weight (r·w/s with s = out-strength Σw) instead of uniformly
+    * weight (r/s·w with s = out-strength Σw) instead of uniformly
     * (r/d). Dangling = no out-edges, exactly as unweighted; Σr = 1
-    * holds by the same argument (weights normalize per node). Same
-    * iteration layout: cached src-partitioned edges, one |V| shuffle +
-    * one scalar per round. */
+    * holds by the same argument (weights normalize per node). */
   def personalizedPageRankWeighted(edges0: DataFrame, srcCol: String,
                                    dstCol: String, wCol: String,
                                    sources: Seq[Long], alpha: Double = 0.15,
-                                   iters: Int = 5): DataFrame = {
-    require(sources.nonEmpty, "personalized PageRank needs at least one source node")
-    val spark = edges0.sparkSession
-    import spark.implicits._
-    val edges = edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("double").as("w"))
-      .repartition(col("src"))
-    val str = edges.groupBy("src").agg(sum(col("w")).as("s")).memoCached()
-    // out-strength fused at build, exactly like prGraph's degree fusion:
-    // one ranks join per iteration, (r/s)·w per edge row with the same
-    // per-src operands as the former two-stage form
-    val edgesS = edges.join(str, "src").memoCached()
-    val srcDf = sources.toDF("v").withColumn("jump0", lit(1.0 / sources.length))
-    val nodes = edgesS.select(col("src").as("v"))
-      .unionAll(edgesS.select(col("dst").as("v")))
-      .unionAll(srcDf.select(col("v"))).distinct()
-    val base = nodes.join(srcDf, Seq("v"), "left")
-      .select(col("v"), coalesce(col("jump0"), lit(0.0)).as("jump0")).memoCached()
-    var ranks = base.select(col("v"), col("jump0").as("r"))
-    for (i <- 1 to iters) {
-      val contrib = edgesS.join(ranks, edgesS("src") === ranks("v"))
-        .groupBy(col("dst").as("v")).agg(sum((col("r") / col("s")) * col("w")).as("c"))
-      val dangling = ranks.join(str, ranks("v") === str("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0.0)).as("m"))
-      ranks = base.join(contrib, Seq("v"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("v"),
-          (lit(1 - alpha) * (coalesce(col("c"), lit(0.0)) + col("m") * col("jump0")) +
-           lit(alpha) * col("jump0")).as("r"))
-      if (i % 3 == 0) ranks = ranks.truncated()
-    }
-    ranks
-  }
+                                   iters: Int = 5): DataFrame =
+    pageRank(keyedEdges(edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(wCol).cast("double").as("w")), sources),
+      col("r") / col("s") * col("w"), sources, alpha, iters)
 
   /** Log-space variant of [[personalizedPageRank]] (reference:
     * a4/RunPersonalizedPageRankBasic.java sums mass in log space).
@@ -1192,37 +1207,28 @@ object GraftOps {
     * (v, lr) with lr = ln r; PageRankDanglingSpec asserts
     * exp(lr) matches the linear-space ranks to 1e-12.
     *
-    * Cost: the per-dst log-sum-exp needs a max before the sum, so each
-    * iteration pays TWO shuffles on the rank table instead of one —
-    * the price of the numeric guard; use the linear core until rank
-    * magnitudes actually approach the underflow regime. */
+    * It reads [[pageRank]]'s keyed edges and node table but keeps its
+    * own round: the per-dst log-sum-exp needs a max before the sum, so
+    * each iteration pays TWO shuffles on the rank table instead of one —
+    * the price of the numeric guard. */
   def personalizedPageRankLog(edges0: DataFrame, srcCol: String, dstCol: String,
                               sources: Seq[Long], alpha: Double = 0.15,
                               iters: Int = 5): DataFrame = {
     require(sources.nonEmpty, "personalized PageRank needs at least one source node")
-    val spark = edges0.sparkSession
-    import spark.implicits._
     val NegInf = Double.NegativeInfinity
-    val edges = edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).memoCached()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d")).memoCached()
-    val srcDf = sources.toDF("v")
-      .withColumn("lnp", lit(math.log(1.0 / sources.length)))
-    val nodes = edges.select(col("src").as("v"))
-      .unionAll(edges.select(col("dst").as("v")))
-      .unionAll(srcDf.select(col("v"))).distinct()
-    val base = nodes.join(srcDf, Seq("v"), "left")
-      .select(col("v"), coalesce(col("lnp"), lit(NegInf)).as("lnp")).memoCached()
-    var lranks = base.select(col("v"), col("lnp").as("lr"))
+    val edges = keyedEdges(edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      sources).df
+    val base = rankNodes(edges, sources)
+      .select(col("v"), when(col("p") > 0, lit(math.log(1.0 / sources.length)))
+        .otherwise(lit(NegInf)).as("lnp"), col("dang"))
+    var lranks = base.select(col("v"), col("lnp").as("lr"), col("dang"))
     for (i <- 1 to iters) {
-      // per-edge contribution in log space: lr(u) − ln d(u)
-      val lrd = lranks.join(deg, lranks("v") === deg("src"))
-        .select(col("v").as("rv"), (col("lr") - log(col("d"))).as("lc"))
-      // ln 0 = -inf carries no mass: drop it here, or a dst whose
-      // in-neighbors ALL hold zero mass would compute exp(-inf − -inf)
-      // = NaN inside its log-sum-exp
-      val flowing = edges.join(lrd, edges("src") === col("rv"))
-        .select(col("dst").as("v"), col("lc"))
+      // per-edge contribution in log space: lr(u) − ln d(u). ln 0 = -inf
+      // carries no mass: drop it here, or a dst whose in-neighbors ALL
+      // hold zero mass would compute exp(-inf − -inf) = NaN inside its
+      // log-sum-exp
+      val flowing = edges.join(lranks, edges("src") === lranks("v"))
+        .select(col("dst").as("v"), (col("lr") - log(col("d"))).as("lc"))
         .filter(col("lc") > NegInf)
       // per-dst log-sum-exp: max first, then ln Σ exp(lc − max) + max
       val mx = flowing.groupBy("v").agg(max(col("lc")).as("mx"))
@@ -1230,8 +1236,7 @@ object GraftOps {
         .groupBy("v")
         .agg((first(col("mx")) + log(sum(exp(col("lc") - col("mx"))))).as("lse_c"))
       // dangling mass, also as a log-sum-exp scalar
-      val dang = lranks.join(deg, lranks("v") === deg("src"), "left_anti")
-        .filter(col("lr") > NegInf)
+      val dang = lranks.filter(col("dang") && col("lr") > NegInf)
       val dmx = dang.agg(coalesce(max(col("lr")), lit(NegInf)).as("dmx"))
       // a global agg over an empty dangling set still yields one row
       // (null aggregates), so the coalesce pins mdl to -inf there
@@ -1241,23 +1246,20 @@ object GraftOps {
       val lnA = math.log(alpha); val ln1A = math.log(1 - alpha)
       lranks = base.join(contrib, Seq("v"), "left")
         .crossJoin(broadcast(dangLse))
-        .select(col("v"),
-          coalesce(col("lse_c"), lit(NegInf)).as("t1c"),
-          col("mdl"), col("lnp"))
-        .select(col("v"),
-          (lit(ln1A) + col("t1c")).as("t1"),
+        .select(col("v"), col("dang"),
+          (lit(ln1A) + coalesce(col("lse_c"), lit(NegInf))).as("t1"),
           (lit(ln1A) + col("mdl") + col("lnp")).as("t2"),
           (lit(lnA) + col("lnp")).as("t3"))
-        .select(col("v"), greatest(col("t1"), col("t2"), col("t3")).as("mx"),
+        .select(col("v"), col("dang"), greatest(col("t1"), col("t2"), col("t3")).as("mx"),
           col("t1"), col("t2"), col("t3"))
         .select(col("v"),
           when(col("mx") === NegInf, lit(NegInf))
             .otherwise(col("mx") + log(
               exp(col("t1") - col("mx")) + exp(col("t2") - col("mx")) +
-                exp(col("t3") - col("mx")))).as("lr"))
+                exp(col("t3") - col("mx")))).as("lr"), col("dang"))
       if (i % 3 == 0) lranks = lranks.truncated()
     }
-    lranks
+    lranks.select(col("v"), col("lr"))
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
@@ -1980,8 +1982,10 @@ object GraftOps {
     *
     * Scale: per half-step one co-partitioned |E|⋈|V| join + a |V|
     * groupBy-sum (map-side partial); the L1 norm is a 1-row broadcast
-    * scalar, never a driver collect. Same iteration layout as
-    * personalizedPageRank — shuffle ∝ |V| per half-step. */
+    * scalar, never a driver collect. The edge checkpoint is not keyed
+    * (hubs join it on dst, authorities on src), so unless AQE broadcasts
+    * the score table each half-step also shuffles the |E| side, unlike
+    * [[pageRank]]'s src-keyed edges. */
   def hits(edges0: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 5): DataFrame = {
     val edges = edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"))

@@ -17,8 +17,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * action) and its cache()d tables silently lose their
   * materialization. This registry records, at creation time, the RDD
   * ids of every frame graft memoizes via `.memoized()` /
-  * `GraftOps.truncate` and a handle to every Dataset graft `.cache()`s
-  * via `.memoCached()`; release walks ONLY that set.
+  * `GraftOps.truncate`; release walks ONLY that set. graft never
+  * `cache()`s or `persist()`s, so it leaves the CacheManager alone.
   *
   * Id capture reads the `rdd` of the `LogicalRDD` leaf that
   * `localCheckpoint()`/`checkpoint()` returns (via reflection — the
@@ -60,8 +60,6 @@ object Memo {
     lookup(spark, dir, tag, sessionLived = true)(build)
 
   private val rddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private val cachedFrames =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Dataset[_]]()
 
   /** RDD ids of the LogicalRDD leaves of a (local)checkpointed frame. */
   private def leafRddIds(ds: Dataset[_]): Seq[Int] =
@@ -76,12 +74,6 @@ object Memo {
   def register[T](checkpointed: Dataset[T]): Dataset[T] = {
     leafRddIds(checkpointed).foreach(id => rddIds.add(id))
     checkpointed
-  }
-
-  /** Record a frame graft has `.cache()`d (CacheManager entry). */
-  def registerCached[T](cached: Dataset[T]): Dataset[T] = {
-    cachedFrames.add(cached)
-    cached
   }
 
   private val broadcasts = java.util.concurrent.ConcurrentHashMap.newKeySet[Broadcast[_]]()
@@ -104,8 +96,8 @@ object Memo {
   /** Free graft-created memo state ONLY: drop every [[keyed]] entry
     * first (so nothing still references a block about to be freed),
     * then unpersist the tracked checkpoint block RDDs still persistent,
-    * drop the tracked CacheManager entries and temp functions, and
-    * destroy the tracked broadcasts. [[layout]] entries, host-app
+    * drop the tracked temp functions, and destroy the tracked
+    * broadcasts. [[layout]] entries, host-app
     * persisted RDDs, cached tables, functions and broadcasts are
     * untouched. */
   def releaseAll(spark: SparkSession): Unit = {
@@ -115,8 +107,6 @@ object Memo {
       persistent.get(id).foreach(_.unpersist(blocking = false))
     }
     rddIds.clear()
-    cachedFrames.forEach(_.unpersist(blocking = false))
-    cachedFrames.clear()
     functions.forEach((name, s) =>
       s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name)))
     functions.clear()
@@ -126,13 +116,12 @@ object Memo {
 
   /** Count of tracked (not-yet-released) memo entries — spec hook. */
   def trackedCount: Int =
-    rddIds.size() + cachedFrames.size() + broadcasts.size() + functions.size()
+    rddIds.size() + broadcasts.size() + functions.size()
 
-  /** `.memoized()` / `.memoCached()` — tracked siblings of
-    * `localCheckpoint()` / `cache()`. Every memoization inside graft
-    * goes through one of these (HygieneSpec polices raw calls). */
+  /** `.memoized()` — tracked sibling of `localCheckpoint()`. Every
+    * memoization inside graft goes through it or `GraftOps.truncate`
+    * (HygieneSpec polices raw calls). */
   implicit class MemoOps[T](private val ds: Dataset[T]) extends AnyVal {
     def memoized(): Dataset[T] = register(ds.localCheckpoint())
-    def memoCached(): Dataset[T] = registerCached(ds.cache())
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.api.Memo
+import graft.api.{GraftOps, Memo}
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 import graft.api.GraftOps.TruncateOps
@@ -43,42 +43,22 @@ object Graph {
         .select(col("l_suppkey"), col("l_partkey")).distinct()
         .memoized())
 
-  /** Src-partitioned symmetric edge relation with fused degree
-    * (src, dst, d) — the reference's PartitionGraph.java:37-118
-    * (RangePartitioner + persisted layout that downstream PageRank reads
-    * shuffle-free), re-expressed as one checkpoint hash-partitioned on
-    * src into the session's shuffle-partition count. The checkpoint's
-    * LogicalRDD reports that partitioning, so every iterative consumer
+  /** Src-keyed symmetric edge relation with fused degree (src, dst, d)
+    * — the reference's PartitionGraph.java:37-118 (RangePartitioner +
+    * persisted layout that downstream PageRank reads shuffle-free), as
+    * one [[GraftOps.keyedEdges]] checkpoint: every iterative consumer
     * (pagerank, CC, BFS) joins its |V|-sized state against it with zero
-    * Exchange on the |E| edge side. Built once per (session, dir) and
-    * freed by [[graft.SparkEntry.releaseMemos]], like every other
-    * graft checkpoint. */
-  def persistedSymEdges(spark: SparkSession, dir: String): DataFrame =
+    * Exchange on the |E| edge side. Built once per (session, dir), freed
+    * by [[graft.SparkEntry.releaseMemos]]. */
+  def persistedSymEdges(spark: SparkSession, dir: String): DataFrame = symEdges(spark, dir).df
+
+  private def symEdges(spark: SparkSession, dir: String): GraftOps.KeyedEdges =
     Memo.keyed(spark, dir, "graph.symEdges") {
       val fwd = liPairs(spark, dir).select(col("l_suppkey").as("src"),
         (col("l_partkey") + PartOffset).as("dst"))
-      val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      plannedStatically(edges.join(deg, "src")
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("src")))
-        .truncated()
+      GraftOps.keyedEdges(fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst"))),
+        Sources)
     }
-
-  /** `df` with its physical plan fixed WITHOUT adaptive execution. A
-    * checkpoint's LogicalRDD takes its partitioning from the plan it
-    * ran, and an adaptive plan reports none, so a checkpoint of an
-    * adaptive `repartition` would forget its hash partitioning. AQE is
-    * switched off only while this one plan is built, and restored
-    * before any job runs. */
-  private def plannedStatically(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val aqe = "spark.sql.adaptive.enabled"
-    val was = conf.get(aqe)
-    conf.set(aqe, "false")
-    try df.queryExecution.executedPlan
-    finally conf.set(aqe, was)
-    df
-  }
 
   /** Distinct co-purchase part pairs (a < b, same order) — shared by
     * the exact and sampled triangle counts. */
@@ -91,43 +71,12 @@ object Graph {
         .memoized()
     }
 
-  // localCheckpoint (not cache): materializes through the normal AQE
-  // execution path and truncates the 5-iteration lineage; cache() would
-  // plan the whole loop without AQE's runtime re-optimization.
+  /** The symmetric graph is closed, so [[GraftOps.pageRank]] skips the
+    * dangling term and the node table. */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
-    Memo.keyed(spark, dir, "graph.pagerank")(computeRanks(spark, dir).memoized())
-
-  private def computeRanks(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // degree is fused into the edge checkpoint, so r/d per edge row uses
-    // the same per-src operands as the unrolled oracle
-    val edgesD = persistedSymEdges(spark, dir)
-    // one row per source carrying its personalized-jump share; the
-    // sources stay nodes even when absent from the edge set, otherwise
-    // their jump mass would silently vanish and Σr < 1
-    val jumps = Sources.toDF("v")
-      .select(col("v"), lit(null).cast("double").as("c"), lit(1.0 / Sources.length).as("jump0"))
-    // one aggregation per round over messages ∪ jump rows. The graph is
-    // symmetric, so every node with an edge receives a message and the
-    // group set is exactly the node set. NO broadcast hints on the
-    // |V|-sized rank table: a hint bypasses Spark's size threshold; AQE
-    // broadcasts it at runtime while it fits (GraphScaleSpec asserts
-    // the iteration stays correct with autoBroadcastJoinThreshold = -1)
-    def step(messages: DataFrame): DataFrame =
-      messages.select(col("v"), col("c"), lit(null).cast("double").as("jump0"))
-        .unionAll(jumps)
-        .groupBy("v")
-        .agg((lit(1 - Alpha) * coalesce(sum(col("c")), lit(0.0)) +
-          lit(Alpha) * coalesce(max(col("jump0")), lit(0.0))).as("r"))
-    // round 1 reads the initial rank (the jump share) off each edge's src
-    var ranks = step(edgesD.select(col("dst").as("v"),
-      (when(col("src").isin(Sources: _*), lit(1.0 / Sources.length))
-        .otherwise(lit(0.0)) / col("d")).as("c")))
-    for (_ <- 2 to Iters)
-      ranks = step(edgesD.join(ranks, edgesD("src") === ranks("v"))
-        .select(col("dst").as("v"), (col("r") / col("d")).as("c")))
-    ranks.select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
-  }
+    Memo.keyed(spark, dir, "graph.pagerank")(
+      GraftOps.pageRank(symEdges(spark, dir), col("r") / col("d"), Sources, Alpha, Iters)
+        .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v").memoized())
 
   /** Unrolled-iteration DuckDB oracle generated from the same constants. */
   private val oracle: String = {
@@ -157,18 +106,17 @@ object Graph {
     * part is a dangling node (no out-edges), so ~half the total mass is
     * dangling each round — the hard case for the reference's dangling-
     * mass redistribution (a4/RunPersonalizedPageRankBasic.java), which
-    * the bipartite mirror above sidesteps. Runs on the generalized
-    * `GraftOps.personalizedPageRank` core. */
+    * the bipartite mirror above sidesteps. Runs on the same
+    * [[GraftOps.pageRank]] core. */
   def pagerankDirected(spark: SparkSession, dir: String): DataFrame = {
     // the DIRECTED supplier→part edges are exactly the src < PartOffset
     // half of the symmetric edge checkpoint (suppliers key below the
-    // offset, parts above): the filter preserves the checkpoint's hash
-    // partitioning on src, so the directed iteration also runs with a
-    // shuffle-free edge side
-    val edges = persistedSymEdges(spark, dir)
-      .filter(col("src") < PartOffset).select("src", "dst")
-    graft.api.GraftOps.personalizedPageRank(edges, "src", "dst", Sources, Alpha, Iters,
-        prePartitioned = true)
+    // offset, parts above): the filter keeps the checkpoint's hash
+    // partitioning on src, and a supplier's symmetric degree is its
+    // directed out-degree
+    val half = persistedSymEdges(spark, dir).filter(col("src") < PartOffset)
+    GraftOps.pageRank(GraftOps.KeyedEdges(half, closed = false), col("r") / col("d"),
+        Sources, Alpha, Iters)
       .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
   }
 
@@ -232,7 +180,7 @@ object Graph {
         .select(col("l_suppkey").as("src"), (col("l_partkey") + PartOffset).as("dst"))
         .distinct()
       Tables.writeBucketed(
-        graft.api.GraftOps.personalizedPageRank(basePairs, "src", "dst",
+        GraftOps.personalizedPageRank(basePairs, "src", "dst",
           Sources, Alpha, Iters),
         name, Seq("v"), ScaleOps.NBuckets)
       name
@@ -245,7 +193,7 @@ object Graph {
       .select(col("l_suppkey").as("src"), (col("l_partkey") + PartOffset).as("dst"))
       .distinct()
     val baseRanks = persistedPagerankBase(spark, dir)
-    graft.api.GraftOps
+    GraftOps
       .personalizedPageRankFrom(fullPairs, "src", "dst", Sources, baseRanks,
         Alpha, IncIters)
       .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
@@ -311,7 +259,7 @@ object Graph {
       .groupBy(col("l_suppkey").as("src"),
         (col("l_partkey") + PartOffset).as("dst"))
       .agg(count(lit(1)).as("w"))
-    graft.api.GraftOps
+    GraftOps
       .personalizedPageRankWeighted(edges, "src", "dst", "w", Sources, Alpha, Iters)
       .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
   }

@@ -210,7 +210,7 @@ object TextRank {
     val e = edges.join(outW, "src")
       .select(col("src"), col("dst"), (col("w") / col("wout")).as("frac"))
       .memoized()
-    val nodes = edges.select(col("src").as("term")).distinct().memoCached()
+    val nodes = edges.select(col("src").as("term")).distinct().memoized()
     var score = nodes.select(col("term"), lit(1.0).as("s"))
     for (_ <- 1 to TrIters) {
       val contrib = e.join(score, e("src") === score("term"))

@@ -28,20 +28,49 @@ class BucketingSpec extends SparkSpec {
 
   test("persisted graph edge layout: iteration join has no Exchange on the edge side") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
-      val edges = graft.operators.Graph.persistedSymEdges(spark, sf)
-      // one PageRank-shaped iteration: |V|-sized state joined against
-      // the layout on src — only the state side may shuffle
+    // pagerank_weighted's input: arbitrary, unpartitioned edges
+    def weighted = Tables.lineitem(spark, sf)
+      .select(col("l_orderkey"), col("l_suppkey"), col("l_partkey")).distinct()
+      .groupBy(col("l_suppkey").as("src"),
+        (col("l_partkey") + graft.operators.Graph.PartOffset).as("dst"))
+      .agg(count(lit(1)).as("w"))
+    // one PageRank-shaped iteration: |V|-sized state joined against
+    // the layout on src — only the state side may shuffle
+    def iterate(edges: org.apache.spark.sql.DataFrame) = {
       val ranks = edges.select(col("src").as("v")).distinct()
         .withColumn("r", lit(1.0))
-      val iter = edges.join(ranks, edges("src") === ranks("v"))
+      edges.join(ranks, edges("src") === ranks("v"))
         .groupBy(col("dst")).agg(sum(col("r") / col("d")).as("c"))
-      // an edge-side exchange would repartition on src (the join key of
-      // the bucketed scan); the state-side shuffle keys on v and the
-      // groupBy's on dst — both legitimate
-      val plan = iter.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning(src"),
-        s"edge side of the iteration join still shuffles:\n${plan.take(2000)}")
+    }
+    try {
+      for (reliable <- Seq(false, true)) {
+        val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-keyed").toString
+        if (reliable) {
+          spark.sparkContext.setCheckpointDir(ckpt)
+          spark.conf.set(graft.api.GraftOps.ReliableCheckpointKey, "true")
+        }
+        try {
+          SparkEntry.releaseMemos(spark)
+          val inputs = Seq(
+            "persistedSymEdges" -> graft.operators.Graph.persistedSymEdges(spark, sf),
+            "keyedEdges(weighted)" -> graft.api.GraftOps.keyedEdges(weighted).df)
+          inputs.foreach { case (name, edges) =>
+            // an edge-side exchange would repartition on src (the join
+            // key of the keyed checkpoint); the state-side shuffle keys
+            // on v and the groupBy's on dst — both legitimate
+            val iter = iterate(edges)
+            val plan = iter.queryExecution.executedPlan.toString
+            assert(!plan.contains("Exchange hashpartitioning(src"),
+              s"$name (reliable=$reliable): edge side of the iteration join still shuffles:\n" +
+                plan.take(2000))
+            assert(iter.count() > 0)
+          }
+        } finally {
+          spark.conf.unset(graft.api.GraftOps.ReliableCheckpointKey)
+          SparkEntry.releaseMemos(spark)
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+        }
+      }
       // cross-check vs the unbucketed equivalent: the same join over raw
       // symmetric edges MUST plan the |E|-side src shuffle the layout
       // eliminates (guards against the assertion going vacuous if plan
@@ -51,9 +80,8 @@ class BucketingSpec extends SparkSpec {
       val fwd = rawPairs.select(col("l_suppkey").as("src"),
         (col("l_partkey") + graft.operators.Graph.PartOffset).as("dst"))
       val rawEdges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      val rawIter = rawEdges.join(ranks, rawEdges("src") === ranks("v"))
-        .groupBy(col("dst")).agg(count(lit(1)).as("c"))
-      val rawPlan = rawIter.queryExecution.executedPlan.toString
+        .withColumn("d", lit(1L))
+      val rawPlan = iterate(rawEdges).queryExecution.executedPlan.toString
       assert(rawPlan.contains("Exchange hashpartitioning(src"),
         s"expected the unbucketed plan to shuffle the edge side:\n${rawPlan.take(2000)}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -82,17 +82,26 @@ class HygieneSpec extends AnyFunSuite {
     // sessions). That guarantee holds iff every persist-like call in
     // the library routes through graft.api.Memo, which records the
     // RDD id / Dataset handle at creation. Raw localCheckpoint/cache/
-    // persist calls are allowed only inside Memo itself and in
-    // GraftOps.truncate's reliable-checkpoint arm (which registers).
-    val exempt = Set("Memo.scala")
+    // localCheckpoint calls are allowed only inside Memo itself and
+    // GraftOps.truncate's reliable-checkpoint arm (which registers);
+    // cache/persist nowhere, so graft leaves the CacheManager alone.
     val hits = for {
       (p, lines) <- sources
-      if !exempt.contains(p.getFileName.toString)
+      tokens = if (p.getFileName.toString == "Memo.scala") Seq(".cache()", ".persist(")
+        else Seq(".localCheckpoint()", ".cache()", ".persist(")
       (line, i) <- lines.zipWithIndex
       if !isComment(line)
-      if Seq(".localCheckpoint()", ".cache()", ".persist(")
-        .exists(line.contains)
+      if tokens.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim.take(120)}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no code switches adaptive execution") {
+    // a session-wide AQE toggle races every concurrent query; a plan
+    // that needs a known partitioning declares it on its checkpoint
+    // (org.apache.spark.sql.graft.KeyedCheckpoint) instead
+    val hits = offending(l => l.contains("spark.sql.adaptive.enabled") ||
+      l.contains("ADAPTIVE_EXECUTION_ENABLED"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

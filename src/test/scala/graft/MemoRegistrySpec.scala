@@ -84,6 +84,7 @@ class MemoRegistrySpec extends SparkSpec {
 
   test("pagerank from a released state: no edge table, no cached frame, bounded jobs") {
     SparkEntry.releaseMemos(spark)
+    spark.catalog.clearCache() // frames other specs in this JVM cached
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val ql = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -101,7 +102,36 @@ class MemoRegistrySpec extends SparkSpec {
     // measured on local[4] at sf0.001: 17 jobs; the bucketed edge
     // table write and the cached node/base tables it replaced took 29
     assert(jobs <= MaxPagerankBuildJobs, s"$jobs construction jobs")
+    // the other rank loops leave no CacheManager entry either
+    Seq[(String, () => DataFrame)](
+      "pagerank_directed" -> (() => Graph.pagerankDirected(spark, sf)),
+      "pagerank_weighted" -> (() => Graph.pagerankWeighted(spark, sf)),
+      "text_textrank" -> (() => TextRank.textTextrank(spark, sf))).foreach { case (q, run) =>
+      run().collect()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q cached a frame")
+    }
     SparkEntry.releaseMemos(spark)
+  }
+
+  test("rank queries leave no cache entry, persistent RDD, memo or table behind a release") {
+    val queries = Seq("pagerank", "pagerank_directed", "pagerank_weighted",
+      "pagerank_incremental", "text_textrank")
+    SparkEntry.releaseMemos(spark)
+    spark.catalog.clearCache() // frames other specs in this JVM cached
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    for (run <- 1 to 2) {
+      queries.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+      SparkEntry.releaseMemos(spark)
+      assert(spark.sharedState.cacheManager.isEmpty, s"run $run: a CacheManager entry")
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(rdds.isEmpty, s"run $run: persistent RDDs $rdds outlived the release")
+      assert(Memo.trackedCount == 0, s"run $run: ${Memo.trackedCount} tracked entries")
+      // the only table these queries may write is the documented
+      // session-lived pagerank base layout
+      val tables = spark.catalog.listTables().collect().map(_.name).toSet -- tablesBefore
+      assert(tables.forall(_.startsWith("graft_pr_base_b")), s"run $run: tables $tables")
+    }
   }
 
   test("releaseMemos drops the triangle Bloom probe's function and destroys its broadcast") {
